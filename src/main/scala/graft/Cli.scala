@@ -110,8 +110,9 @@ object Cli {
       return 1
     }
     val engine = graft.api.Engine.fromManifest(spark, manifest.toString,
-      Some(root.resolve(".graft/usage").toString), cfg)
-    ssePort match {
+      Some(usageLogPath(root)), cfg)
+    // close() writes the usage rows still buffered when the session ends.
+    try ssePort match {
       case Some(p) =>
         val server = graft.serve.McpSseServer.start(engine, p)
         out.println(s"""{"status":"ready","transport":"sse",""" +
@@ -122,8 +123,11 @@ object Cli {
       case None =>
         if (mcp) graft.serve.McpServer.loop(engine, in, out)
         else graft.serve.JsonLineServer.loop(engine, in, out)
-    }
+    } finally engine.close()
   }
+
+  /** The usage log `serve` writes and `usage` reads. */
+  private def usageLogPath(root: Path): String = root.resolve(".graft/usage/log").toString
 
   private def rootOf(rest: List[String]): Path =
     rest.headOption.map(Paths.get(_)).getOrElse(Paths.get("."))
@@ -188,8 +192,7 @@ object Cli {
 
   private def usageStats(spark: SparkSession, root: Path, days: Int,
       out: java.io.PrintStream): Int = {
-    val path = root.resolve(".graft/usage/log").toString
-    val log = new UsageLog(spark, path)
+    val log = new UsageLog(spark, usageLogPath(root))
     val st = try log.stats(days).collect().head
       catch { case _: Throwable => out.println("No usage recorded yet."); return 0 }
     out.println(s"Usage, trailing $days days:")

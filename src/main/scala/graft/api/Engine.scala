@@ -1,12 +1,11 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.capsule.CapsuleBuilder
 import graft.graph.Lineage
 import graft.ingest.ManifestReader
-import graft.model.{Catalog, ContextCapsule, DiscoverEntry}
+import graft.model.{Catalog, ContextCapsule, DiscoverEntry, SearchHit, ToolRows}
 import graft.patterns.Patterns
 import graft.search.HybridSearch
 import graft.usage.UsageLog
@@ -23,6 +22,11 @@ import graft.usage.UsageLog
   *
   * Parameter clamps (limit ≤ 50, depth ≤ 10 — server.py:148,266,338,363)
   * live here, at the API boundary, exactly as in the reference.
+  *
+  * The row-valued tools come in two forms: `xxxRows` returns the
+  * driver-side rows the serve transports render (no DataFrame, no
+  * Catalyst plan), and the DataFrame method of the same name wraps
+  * those rows for Spark consumers.
   *
   * Telemetry: every tool call appends a usage row (server.py:101-110),
   * and [[rateCapsule]] attaches a 1–5 rating to the most recent capsule
@@ -62,22 +66,15 @@ class Engine private (spark: SparkSession, manifestPath: String,
     out
   }
 
-  /** Time + log a DataFrame-returning tool call, executing the plan
-    * ONCE. Telemetry needs the row count and every serving caller
-    * immediately collects, so `tokens = _.count()` would pay the full
-    * plan twice per call; instead collect here, log the length, and
-    * return the rows as a local relation (tool results are clamped to
-    * ≤ ~100 rows, so driver residency is the serving contract, not a
-    * scale hazard — distributed consumers use the query tier). */
-  private def loggedDf(tool: String, taskText: String, intent: String = "",
-      focusModel: Option[String] = None)(body: => DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val df = body
-    val rows = df.collect()
-    val ms = (System.nanoTime() - t0) / 1000000
-    usage.log(tool, taskText, intent, rows.length.toLong, ms, focusModel = focusModel)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-  }
+  /** Time + log a row-valued tool call; the token estimate is the row
+    * count. The rows are computed once, driver-side, on the snapshot:
+    * the serve transports render them as they are, and the DataFrame
+    * methods below wrap them with one `toDF` (tool results are clamped
+    * to ≤ ~100 rows, so driver residency is the serving contract, not
+    * a scale hazard — distributed consumers use the query tier). */
+  private def loggedRows[T <: Product](tool: String, taskText: String, intent: String = "")(
+      body: => ToolRows[T]): ToolRows[T] =
+    logged(tool, taskText, intent)(body)(tokens = _.rows.size.toLong)
 
   def getContextCapsule(task: String, focusModel: Option[String] = None,
       entryModels: Seq[String] = Nil, entryPaths: Seq[String] = Nil,
@@ -101,12 +98,7 @@ class Engine private (spark: SparkSession, manifestPath: String,
     }(tokens = _.size.toLong * 12) // ~12 tokens/entry (server.py:35,124)
 
   def getModelDetails(modelName: String): DataFrame =
-    loggedDf("get_model_details", modelName) {
-      hybrid.lookup(modelName)
-        .select(col("unique_id"), col("name"), col("layer"), col("materialization"),
-          col("file_path"), col("description"), col("upstream_count"),
-          col("downstream_count"), col("centrality"))
-    }
+    loggedRows("get_model_details", modelName)(hybrid.lookupRows(modelName)).toDF(spark)
 
   def getColumns(modelId: String): DataFrame = hybrid.columnsWithTests(modelId)
 
@@ -121,33 +113,50 @@ class Engine private (spark: SparkSession, manifestPath: String,
   def getTestCoverageSummary(modelId: String): graft.model.CoverageSummary =
     hybrid.coverageSummary(modelId)
 
-  def getLineage(modelId: String, upDepth: Int = 3, downDepth: Int = 3): DataFrame =
-    loggedDf("get_lineage", modelId) {
-      lineageOps.lineage(modelId, clampDepth(upDepth), clampDepth(downDepth))
+  def getLineageRows(modelId: String, upDepth: Int = 3,
+      downDepth: Int = 3): ToolRows[Lineage.LineageRow] =
+    loggedRows("get_lineage", modelId) {
+      lineageOps.lineageRows(modelId, clampDepth(upDepth), clampDepth(downDepth))
     }
 
+  def getLineage(modelId: String, upDepth: Int = 3, downDepth: Int = 3): DataFrame =
+    getLineageRows(modelId, upDepth, downDepth).toDF(spark)
+
+  def getImpactAnalysisRows(modelId: String, depth: Int = 5): ToolRows[Lineage.ImpactRow] =
+    loggedRows("get_impact_analysis", modelId)(lineageOps.impactRows(modelId, clampDepth(depth)))
+
   def getImpactAnalysis(modelId: String, depth: Int = 5): DataFrame =
-    loggedDf("get_impact_analysis", modelId) {
-      lineageOps.impact(modelId, clampDepth(depth))
+    getImpactAnalysisRows(modelId, depth).toDF(spark)
+
+  def searchModelsRows(query: String, limit: Int = 10, intent: String = "explore",
+      layer: Option[String] = None): ToolRows[SearchHit] =
+    loggedRows("search_models", query, intent) {
+      val res = hybrid.searchRows(query, intent, clampLimit(limit) * 2)
+      res.copy(rows = layer.fold(res.rows)(l => res.rows.filter(_.layer == l))
+        .take(clampLimit(limit)))
     }
 
   def searchModels(query: String, limit: Int = 10, intent: String = "explore",
       layer: Option[String] = None): DataFrame =
-    loggedDf("search_models", query, intent) {
-      val res = hybrid.search(query, intent, clampLimit(limit) * 2)
-      layer.fold(res)(l => res.filter(col("layer") === l))
-        .limit(clampLimit(limit))
+    searchModelsRows(query, limit, intent, layer).toDF(spark)
+
+  def findModelsByColumnRows(columnName: String,
+      limit: Int = 20): ToolRows[HybridSearch.ColumnMatch] =
+    loggedRows("find_models_by_column", columnName) {
+      hybrid.findByColumnRows(columnName, clampLimit(limit))
     }
 
   def findModelsByColumn(columnName: String, limit: Int = 20): DataFrame =
-    loggedDf("find_models_by_column", columnName) {
-      hybrid.findByColumn(columnName, clampLimit(limit))
+    findModelsByColumnRows(columnName, limit).toDF(spark)
+
+  def findModelsByPathRows(pathPattern: String,
+      limit: Int = 20): ToolRows[HybridSearch.PathMatch] =
+    loggedRows("find_models_by_path", pathPattern) {
+      hybrid.findByPathRows(pathPattern, clampLimit(limit))
     }
 
   def findModelsByPath(pathPattern: String, limit: Int = 20): DataFrame =
-    loggedDf("find_models_by_path", pathPattern) {
-      hybrid.findByPath(pathPattern, clampLimit(limit))
-    }
+    findModelsByPathRows(pathPattern, limit).toDF(spark)
 
   def getProjectStats(): DataFrame = patternsOps.stats()
 
@@ -182,6 +191,10 @@ class Engine private (spark: SparkSession, manifestPath: String,
     capsules = new CapsuleBuilder(catalog, hybrid, lineageOps, patternsOps,
       config.capsule)
   }
+
+  /** End of a serving session: waits until every usage row logged so
+    * far is written ([[UsageLog.close]]). */
+  def close(): Unit = usage.close()
 }
 
 object Engine {

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 
-import graft.model.Catalog
+import graft.model.{Catalog, ToolRows}
 
 /** DAG analytics over the catalog edge list — lineage, impact, source
   * dependencies, centrality ranking
@@ -17,6 +17,8 @@ import graft.model.Catalog
   * (`graft.queries.Graph`) exercise end-to-end.
   */
 class Lineage(catalog: Catalog) {
+
+  import Lineage._
 
   private def snap = catalog.snapshot
   private def spark = catalog.models.sparkSession
@@ -49,9 +51,7 @@ class Lineage(catalog: Catalog) {
 
   /** Both directions tagged with direction, ordered (direction,
     * distance, id) — `get_lineage` (server.py:240-307). */
-  def lineage(id: String, upDepth: Int, downDepth: Int): DataFrame = {
-    val s = spark
-    import s.implicits._
+  def lineageRows(id: String, upDepth: Int, downDepth: Int): ToolRows[LineageRow] = {
     val rows =
       enriched(snap.bfs(Seq(id), upDepth, up = true)).map { case (nid, d, n, l, m) =>
         (nid, d, "upstream", n, l, m)
@@ -59,16 +59,17 @@ class Lineage(catalog: Catalog) {
       enriched(snap.bfs(Seq(id), downDepth, up = false)).map { case (nid, d, n, l, m) =>
         (nid, d, "downstream", n, l, m)
       }
-    rows.sortBy { case (nid, d, dir, _, _, _) => (dir, d, nid) }
-      .toDF("id", "distance", "direction", "name", "layer", "materialization")
+    ToolRows(Seq("id", "distance", "direction", "name", "layer", "materialization"),
+      rows.sortBy { case (nid, d, dir, _, _, _) => (dir, d, nid) })
   }
+
+  def lineage(id: String, upDepth: Int, downDepth: Int): DataFrame =
+    lineageRows(id, upDepth, downDepth).toDF(spark)
 
   /** Impact analysis (graph.py:79-132): downstream reach split by node
     * type, test count, rule-based risk level — one aggregation pass
     * over the reach set. */
-  def impact(id: String, depth: Int = 5): DataFrame = {
-    val s = spark
-    import s.implicits._
+  def impactRows(id: String, depth: Int = 5): ToolRows[ImpactRow] = {
     val reach = snap.bfs(Seq(id), math.min(depth, 10), up = false).map(_._1)
     val modelsReached = reach.filter(_.startsWith("model."))
     val nExposures = reach.count(_.startsWith("exposure.")).toLong
@@ -81,9 +82,11 @@ class Lineage(catalog: Catalog) {
       if (nExposures > 0 || (nMarts > 0 && nModels > 5)) "high"
       else if (nModels > 3 || nMarts > 0) "medium"
       else "low"
-    Seq((nModels, nExposures, nTests, nMarts, risk))
-      .toDF("n_models", "n_exposures", "n_tests", "n_marts", "risk")
+    ToolRows(Seq("n_models", "n_exposures", "n_tests", "n_marts", "risk"),
+      Seq((nModels, nExposures, nTests, nMarts, risk)))
   }
+
+  def impact(id: String, depth: Int = 5): DataFrame = impactRows(id, depth).toDF(spark)
 
   /** Source dependencies (graph.py:136-150): upstream depth 10, keep
     * source.* ids, enrich from sources. */
@@ -109,4 +112,11 @@ class Lineage(catalog: Catalog) {
       .map(m => (m.uniqueId, m.name, m.layer, m.centrality, m.downstreamCount))
       .toDF("unique_id", "name", "layer", "centrality", "downstream_count")
   }
+}
+
+object Lineage {
+  /** (id, distance, direction, name, layer, materialization). */
+  type LineageRow = (String, Int, String, Option[String], Option[String], Option[String])
+  /** (n_models, n_exposures, n_tests, n_marts, risk). */
+  type ImpactRow = (Long, Long, Long, Long, String)
 }

@@ -48,6 +48,25 @@ final case class SearchHit(
     nameBonus: Double,
     score: Double)
 
+/** The driver-side rows of a row-valued tool, with their column names.
+  * The serve transports render them as ordered objects; the DataFrame
+  * API wraps them with one [[toDF]] (a LocalRelation: no job). */
+final case class ToolRows[T <: Product](columns: Seq[String], rows: Seq[T]) {
+
+  def toDF(spark: org.apache.spark.sql.SparkSession)(
+      implicit tt: scala.reflect.runtime.universe.TypeTag[T]): DataFrame =
+    spark.createDataFrame(rows).toDF(columns: _*)
+
+  /** The first `n` rows as insertion-ordered objects; a `None` field is
+    * null, exactly what a collected Row carries for it. */
+  def objects(n: Int): Seq[Map[String, Any]] = rows.take(n).map { r =>
+    scala.collection.immutable.ListMap(columns.zip(r.productIterator.map {
+      case o: Option[_] => o.getOrElse(null)
+      case v => v
+    }): _*)
+  }
+}
+
 /** Skeletonization levels (`models.py:133-162`). */
 final case class SkeletonColumn(name: String, dataType: String, description: String, tests: Seq[String])
 final case class FullModelContext(

@@ -423,7 +423,8 @@ object Ann {
   /** Driver-side probe selection (r16): the query vectors (a ≤queries-
     * row pushed-filter scan, ONE tiny job) and the centroids (an
     * already-checkpointed numCentroids-row frame) are both driver-
-    * bounded, so the top-NProbe argmax runs as a plain Scala loop —
+    * bounded (≤ NumQueries and ≤ numCentroids rows, checked), so the
+    * queries × centroids top-NProbe argmax runs as a plain Scala loop —
     * zero Spark jobs beyond the query fetch, and the qv doubles round-
     * trip exactly (collect → literal frame). The dot product uses the
     * same left-to-right accumulation as `graft_dot`, so the selected
@@ -437,6 +438,9 @@ object Ann {
       .select(col("vec_id"), col("v")).collect()
     val cents = idx.centroids.select(col("cid"), col("cv")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    require(qRows.length <= NumQueries && cents.length <= idx.numCentroids,
+      s"probe selection collected ${qRows.length} queries x ${cents.length} centroids, " +
+        s"over the $NumQueries x ${idx.numCentroids} bound")
     val probeRows = qRows.flatMap { r =>
       val qid = r.getLong(0)
       val qv = r.getSeq[Double](1).toArray

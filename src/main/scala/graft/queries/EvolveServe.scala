@@ -342,10 +342,11 @@ object EvolveServe {
         // discipline) — under pipeline_overlap the materialization runs
         // on a side thread, overlapped with the next batch's ledger;
         // serve.await() above is the ordering barrier. The side
-        // thread's jobs run in their own FAIR scheduler pool (r16 —
-        // bounds mutual starvation against the concurrent ledger jobs;
-        // Tables.configure sets spark.scheduler.mode=FAIR, Par.async
-        // scopes the pool to the side thread).
+        // thread's jobs are tagged with the `graft-serve` pool (Par.async
+        // scopes it to the side thread). The pool only takes effect under
+        // SPARK_GRAFT_SCHEDULER=FAIR, where it bounds mutual starvation
+        // against the concurrent ledger jobs; Tables.configure's default
+        // scheduler is FIFO.
         val poNow = po
         serve = graft.util.Par.async(overlap, pool = "graft-serve")(() => {
           answers(b) = serveAnswers(b, poNow, iv, CleanServeAnnPred,

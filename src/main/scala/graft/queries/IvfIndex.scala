@@ -51,7 +51,7 @@ object IvfIndex {
       private[graft] val generation: Int,
       private[graft] val cacheKey: String,
       val centroids: DataFrame,
-      numCentroids: Int, trainIters: Int, trainQuant: Double,
+      private[graft] val numCentroids: Int, trainIters: Int, trainQuant: Double,
       /** PQ codebooks when the index was built with `pq = true` —
         * PLAIN books (sub, cid, cv) trained on the vectors and
         * RESIDUAL books trained on v − centroid(v) (the r13 fixed-pool

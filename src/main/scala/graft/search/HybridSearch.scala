@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
-import graft.model.{Catalog, SearchHit}
+import graft.model.{Catalog, SearchHit, ToolRows}
 import graft.serve.{ModelInfo, Posting}
 
 /** Hybrid model search: field-weighted BM25 recall + graph-centrality
@@ -130,15 +130,14 @@ class HybridSearch(catalog: Catalog) {
     }.sortBy(h => (-h.score, h.uniqueId)).take(limit)
   }
 
-  /** [[searchHits]] as a DataFrame (LocalRelation — no job). */
+  /** [[searchHits]] under the search_models column names. */
+  def searchRows(query: String, intent: String = "explore", limit: Int = 10,
+      excludeIds: Seq[String] = Nil): ToolRows[SearchHit] =
+    ToolRows(SearchColumns, searchHits(query, intent, limit, excludeIds))
+
   def search(query: String, intent: String = "explore", limit: Int = 10,
-      excludeIds: Seq[String] = Nil): DataFrame = {
-    val s = spark
-    import s.implicits._
-    searchHits(query, intent, limit, excludeIds)
-      .toDF("unique_id", "name", "layer", "description", "bm25_score",
-        "centrality", "layer_boost", "name_bonus", "score")
-  }
+      excludeIds: Seq[String] = Nil): DataFrame =
+    searchRows(query, intent, limit, excludeIds).toDF(spark)
 
   /** Per-model macro containment for a pivot set, driver-side. */
   def macroRowsForModels(modelIds: Seq[String]): Seq[(String, graft.serve.MacroInfo)] =
@@ -179,44 +178,45 @@ class HybridSearch(catalog: Catalog) {
   // ── Finders / lookups (search.py:148-328) — all serving-tier ────────
 
   /** Models having a column whose name contains `columnName` (O6). */
-  def findByColumn(columnName: String, limit: Int = 10): DataFrame = {
-    val s = spark
-    import s.implicits._
+  def findByColumnRows(columnName: String, limit: Int = 10): ToolRows[ColumnMatch] = {
     val needle = columnName.toLowerCase
-    snap.models
-      .filter(m => snap.columnsByModel.getOrElse(m.uniqueId, Vector.empty)
-        .exists(_.name.toLowerCase.contains(needle)))
-      .sortBy(m => (-m.centrality, m.uniqueId))
-      .take(limit)
-      .map(m => (m.uniqueId, m.name, m.layer, m.filePath, m.centrality))
-      .toDF("unique_id", "name", "layer", "file_path", "centrality")
+    ToolRows(Seq("unique_id", "name", "layer", "file_path", "centrality"),
+      snap.models
+        .filter(m => snap.columnsByModel.getOrElse(m.uniqueId, Vector.empty)
+          .exists(_.name.toLowerCase.contains(needle)))
+        .sortBy(m => (-m.centrality, m.uniqueId))
+        .take(limit)
+        .map(m => (m.uniqueId, m.name, m.layer, m.filePath, m.centrality)))
   }
+
+  def findByColumn(columnName: String, limit: Int = 10): DataFrame =
+    findByColumnRows(columnName, limit).toDF(spark)
 
   /** Models under a path LIKE pattern (O7); '%' supplied by caller. */
-  def findByPath(pattern: String, limit: Int = 20): DataFrame = {
-    val s = spark
-    import s.implicits._
+  def findByPathRows(pattern: String, limit: Int = 20): ToolRows[PathMatch] = {
     val re = likeToRegex(pattern)
-    snap.models
-      .filter(m => m.filePath != null && re.matches(m.filePath))
-      .sortBy(_.name)
-      .take(limit)
-      .map(m => (m.uniqueId, m.name, m.layer, m.filePath))
-      .toDF("unique_id", "name", "layer", "file_path")
+    ToolRows(Seq("unique_id", "name", "layer", "file_path"),
+      snap.models
+        .filter(m => m.filePath != null && re.matches(m.filePath))
+        .sortBy(_.name)
+        .take(limit)
+        .map(m => (m.uniqueId, m.name, m.layer, m.filePath)))
   }
 
+  def findByPath(pattern: String, limit: Int = 20): DataFrame =
+    findByPathRows(pattern, limit).toDF(spark)
+
   /** Point lookup by case-insensitive name, else by unique_id (O8). */
-  def lookup(nameOrId: String): DataFrame = {
-    val s = spark
-    import s.implicits._
-    snap.idByNameLower.get(nameOrId.toLowerCase)
-      .orElse(if (snap.modelById.contains(nameOrId)) Some(nameOrId) else None)
-      .flatMap(snap.modelById.get).toSeq
-      .map(m => (m.uniqueId, m.name, m.layer, m.materialization, m.filePath,
-        m.description, m.upstreamCount, m.downstreamCount, m.centrality))
-      .toDF("unique_id", "name", "layer", "materialization", "file_path",
-        "description", "upstream_count", "downstream_count", "centrality")
-  }
+  def lookupRows(nameOrId: String): ToolRows[ModelDetails] =
+    ToolRows(Seq("unique_id", "name", "layer", "materialization", "file_path",
+        "description", "upstream_count", "downstream_count", "centrality"),
+      snap.idByNameLower.get(nameOrId.toLowerCase)
+        .orElse(if (snap.modelById.contains(nameOrId)) Some(nameOrId) else None)
+        .flatMap(snap.modelById.get).toSeq
+        .map(m => (m.uniqueId, m.name, m.layer, m.materialization, m.filePath,
+          m.description, m.upstreamCount, m.downstreamCount, m.centrality)))
+
+  def lookup(nameOrId: String): DataFrame = lookupRows(nameOrId).toDF(spark)
 
   /** File-path resolution (P6) as ids: exact file_path match unioned
     * with case-insensitive basename-minus-.sql name match; yml skipped. */
@@ -356,6 +356,18 @@ object HybridSearch {
   private val fieldWeightMap: Map[String, Double] = fieldWeights.toMap
 
   private val emptyPostings = Array.empty[Posting]
+
+  /** (unique_id, name, layer, file_path, centrality). */
+  type ColumnMatch = (String, String, String, String, Double)
+  /** (unique_id, name, layer, file_path). */
+  type PathMatch = (String, String, String, String)
+  /** (unique_id, name, layer, materialization, file_path, description,
+    * upstream_count, downstream_count, centrality). */
+  type ModelDetails = (String, String, String, String, String, String, Long, Long, Double)
+
+  /** search_models columns, in [[SearchHit]] field order. */
+  val SearchColumns: Seq[String] = Seq("unique_id", "name", "layer", "description",
+    "bm25_score", "centrality", "layer_boost", "name_bonus", "score")
 
   val stopwords: Set[String] = Set("a", "an", "the", "to", "for", "in", "of",
     "on", "at", "with", "and", "or", "is", "it")

@@ -2,9 +2,8 @@ package graft.serve
 
 import java.io.{BufferedReader, PrintStream}
 
-import org.apache.spark.sql.DataFrame
-
 import graft.api.Engine
+import graft.model.ToolRows
 import graft.util.{Json, JsonParse}
 
 /** The CLI `serve` transport: a long-running JSON-lines loop over the
@@ -16,9 +15,10 @@ import graft.util.{Json, JsonParse}
   * `{"tool": "<name>", "args": {...}}`; one response object per stdout
   * line, `{"result": ...}` or `{"error": "..."}`. The 10-tool contract
   * and argument names mirror server.py; `exit` (or EOF) ends the loop.
-  * DataFrame-valued tools return their rows as ordered objects, capped
-  * at 200 rows — serve is the bounded interactive tier, the unbounded
-  * path stays in the distributed queries.
+  * Row-valued tools return their rows as ordered objects, capped at 200
+  * rows — serve is the bounded interactive tier, the unbounded path
+  * stays in the distributed queries. The rows come straight from the
+  * engine's driver-side snapshot: no DataFrame is built per call.
   */
 object JsonLineServer {
 
@@ -51,8 +51,8 @@ object JsonLineServer {
     *
     * The whole call runs inside a [[graft.util.CheckpointHygiene]]
     * scope (r11 VERDICT): every result below is fully materialized
-    * driver-side before the scope exits (rows() collects under
-    * [[RowCap]], capsule/details return driver maps), so the scope's
+    * driver-side before the scope exits (row tools return snapshot rows,
+    * capsule/details return driver maps), so the scope's
     * consume contract holds — and, more importantly, a dispatch that
     * RACES another scoped invocation on the same session (a bench
     * round, an evolving stream's micro-batch) now MERGES with it
@@ -100,17 +100,17 @@ object JsonLineServer {
           .getOrElse(throw new IllegalArgumentException(
             s"model not found: ${str("model_name")}"))
       case "get_lineage" =>
-        rows(engine.getLineage(str("model_id"),
+        rows(engine.getLineageRows(str("model_id"),
           int("up_depth", 3), int("down_depth", 3)))
       case "get_impact_analysis" =>
-        rows(engine.getImpactAnalysis(str("model_id"), int("depth", 5)))
+        rows(engine.getImpactAnalysisRows(str("model_id"), int("depth", 5)))
       case "search_models" =>
-        rows(engine.searchModels(str("query"), int("limit", 10),
+        rows(engine.searchModelsRows(str("query"), int("limit", 10),
           optStr("intent").getOrElse("explore"), optStr("layer")))
       case "find_models_by_column" =>
-        rows(engine.findModelsByColumn(str("column_name"), int("limit", 20)))
+        rows(engine.findModelsByColumnRows(str("column_name"), int("limit", 20)))
       case "find_models_by_path" =>
-        rows(engine.findModelsByPath(str("path_pattern"), int("limit", 20)))
+        rows(engine.findModelsByPathRows(str("path_pattern"), int("limit", 20)))
       case "refresh_index" =>
         engine.refreshIndex()
         Map("status" -> "ok")
@@ -127,12 +127,6 @@ object JsonLineServer {
     case _ => throw new IllegalArgumentException(s"$what must be a JSON object")
   }
 
-  /** DataFrame rows as insertion-ordered objects (serve-tier cap). */
-  private def rows(df: DataFrame): Seq[Map[String, Any]] = {
-    val names = df.schema.fieldNames
-    df.limit(RowCap).collect().toSeq.map { r =>
-      scala.collection.immutable.ListMap(
-        names.zipWithIndex.map { case (n, j) => n -> r.get(j) }: _*)
-    }
-  }
+  /** Tool rows as insertion-ordered objects (serve-tier cap). */
+  private def rows(r: ToolRows[_]): Seq[Map[String, Any]] = r.objects(RowCap)
 }

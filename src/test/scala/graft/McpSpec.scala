@@ -3,8 +3,15 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+import graft.api.Engine
 import graft.serve.McpServer
-import graft.util.JsonParse
+import graft.util.{Json, JsonParse}
 
 /** MCP stdio framing (`serve --mcp`): JSON-RPC 2.0 handshake,
   * tools/list catalog parity with the JSON-lines transport, tools/call
@@ -109,5 +116,129 @@ class McpSpec extends SparkSuite {
     val linesResult = JsonParse.parse(viaLines(1)).asInstanceOf[Map[String, Any]]("result")
     assert(JsonParse.parse(mcpText) == linesResult,
       "the MCP content text must be the JSON-lines result, rendered")
+  }
+
+  /** The fixture manifest plus `misc_orders`, a model under a path with
+    * no layer keyword (so its layer is null), downstream of stg_orders. */
+  private def manifestWithNullLayer(): String = {
+    val m = JsonParse.parse(Files.readString(java.nio.file.Paths.get(fixturePath("manifest.json"))))
+      .asInstanceOf[Map[String, Any]]
+    val nodes = m("nodes").asInstanceOf[Map[String, Any]]
+    val stg = nodes("model.shoply.stg_orders").asInstanceOf[Map[String, Any]]
+    val misc = stg ++ Map(
+      "unique_id" -> "model.shoply.misc_orders", "name" -> "misc_orders",
+      "fqn" -> Seq("shoply", "misc", "misc_orders"),
+      "original_file_path" -> "models/misc/misc_orders.sql", "sources" -> Nil,
+      "depends_on" -> Map("nodes" -> Seq("model.shoply.stg_orders")))
+    val parents = m("parent_map").asInstanceOf[Map[String, Any]]
+    val out = Files.createTempDirectory("graft_mcp_rows").resolve("manifest.json")
+    Files.writeString(out, Json.render(m ++ Map(
+      "nodes" -> (nodes + ("model.shoply.misc_orders" -> misc)),
+      "parent_map" -> (parents + ("model.shoply.misc_orders" -> Seq("model.shoply.stg_orders"))))))
+    out.toString
+  }
+
+  private def callText(engine: Engine, tool: String, args: String): String = {
+    val line = s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{"name":"$tool","arguments":$args}}"""
+    val result = JsonParse.parse(McpServer.handle(engine, line).get)
+      .asInstanceOf[Map[String, Any]]("result").asInstanceOf[Map[String, Any]]
+    assert(result("isError") == false, result)
+    result("content").asInstanceOf[List[Map[String, Any]]].head("text").toString
+  }
+
+  /** A tool's DataFrame, rendered the way the transports rendered row
+    * tools before they answered from driver rows. */
+  private def dfText(df: DataFrame): String = {
+    val names = df.schema.fieldNames
+    Json.render(df.limit(200).collect().toSeq.map { r =>
+      ListMap(names.zipWithIndex.map { case (n, j) => n -> r.get(j) }: _*)
+    })
+  }
+
+  test("row tools: MCP reply text is byte-equal to the DataFrame rendering") {
+    val usage = Files.createTempDirectory("graft_mcp_rows_usage").toString + "/log"
+    val engine = Engine.fromManifest(spark, manifestWithNullLayer(), Some(usage))
+    val stg = "model.shoply.stg_orders"
+    val cases: Seq[(String, String, () => DataFrame)] = Seq(
+      ("search_models", """{"query":"orders","limit":5}""", () => engine.searchModels("orders", 5)),
+      ("search_models", """{"query":"orders","layer":"marts"}""",
+        () => engine.searchModels("orders", layer = Some("marts"))),
+      ("search_models", """{"query":"customer payments","intent":"debug","limit":50}""",
+        () => engine.searchModels("customer payments", 50, "debug")),
+      ("search_models", """{"query":"zzznothing"}""", () => engine.searchModels("zzznothing")),
+      ("get_lineage", s"""{"model_id":"$stg"}""", () => engine.getLineage(stg)),
+      ("get_lineage", s"""{"model_id":"$stg","up_depth":0,"down_depth":0}""",
+        () => engine.getLineage(stg, 0, 0)),
+      ("get_lineage", """{"model_id":"model.shoply.nope"}""",
+        () => engine.getLineage("model.shoply.nope")),
+      ("get_impact_analysis", s"""{"model_id":"$stg"}""", () => engine.getImpactAnalysis(stg)),
+      ("get_impact_analysis", s"""{"model_id":"$stg","depth":0}""",
+        () => engine.getImpactAnalysis(stg, 0)),
+      ("get_impact_analysis", """{"model_id":"model.shoply.nope"}""",
+        () => engine.getImpactAnalysis("model.shoply.nope")),
+      ("find_models_by_column", """{"column_name":"order_id"}""",
+        () => engine.findModelsByColumn("order_id")),
+      ("find_models_by_column", """{"column_name":"no_such_col","limit":3}""",
+        () => engine.findModelsByColumn("no_such_col", 3)),
+      ("find_models_by_path", """{"path_pattern":"models/%"}""",
+        () => engine.findModelsByPath("models/%")),
+      ("find_models_by_path", """{"path_pattern":"models/misc/%"}""",
+        () => engine.findModelsByPath("models/misc/%")))
+    try {
+      cases.foreach { case (tool, args, df) =>
+        assert(callText(engine, tool, args) == dfText(df()), s"$tool $args")
+      }
+      // the null cases were exercised: a null-layer model and a source
+      // row (no model fields) in the lineage, the null layer in a finder
+      val lineage = callText(engine, "get_lineage", s"""{"model_id":"$stg"}""")
+      assert(lineage.contains(""""id": "model.shoply.misc_orders", "distance": 1, """ +
+        """"direction": "downstream", "name": "misc_orders", "layer": null"""), lineage)
+      assert(lineage.contains(""""id": "source.shoply.raw.orders", "distance": 1, """ +
+        """"direction": "upstream", "name": null, "layer": null, "materialization": null"""), lineage)
+      assert(callText(engine, "find_models_by_path", """{"path_pattern":"models/misc/%"}""")
+        .contains(""""layer": null"""))
+    } finally engine.close()
+  }
+
+  test("row tools start no Spark job and no SQL execution") {
+    val usage = Files.createTempDirectory("graft_mcp_nojob_usage").toString + "/log"
+    val engine = Engine.fromManifest(spark, fixturePath("manifest.json"), Some(usage))
+    val calls = Seq(
+      "search_models" -> """{"query":"orders","limit":5}""",
+      "search_models" -> """{"query":"orders","layer":"marts"}""",
+      "get_lineage" -> """{"model_id":"model.shoply.stg_orders"}""",
+      "get_impact_analysis" -> """{"model_id":"model.shoply.stg_orders","depth":3}""",
+      "find_models_by_column" -> """{"column_name":"customer_id"}""",
+      "find_models_by_path" -> """{"path_pattern":"models/staging/%"}""")
+    engine.catalog.snapshot // the lazy snapshot build runs jobs; keep it outside
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sqls = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "mcp-nojob-marker"))
+          marker.countDown()
+        else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqls.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // 3 × 6 = 18 calls: under UsageLog.FlushEvery, so no flush is due
+      for (_ <- 1 to 3; (tool, args) <- calls) callText(engine, tool, args)
+      // an RDD job (no SQL execution) after the calls: once the listener
+      // sees it, it has seen every event posted before it
+      spark.sparkContext.setJobDescription("mcp-nojob-marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 0, "row tools must not run Spark jobs")
+      assert(sqls.get == 0, "row tools must not start SQL executions")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      engine.close()
+    }
   }
 }

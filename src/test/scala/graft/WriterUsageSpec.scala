@@ -95,4 +95,72 @@ class WriterUsageSpec extends SparkSuite {
     assert(engine.usage.daily().collect().map(_.getAs[Long]("n")).sum == 3L)
     assert(engine.usage.recent(2).count() == 2)
   }
+
+  test("all() sees every row logged before it, written batches and buffered rows alike") {
+    val dir = Files.createTempDirectory("graft_usage").toString + "/log"
+    val log = new UsageLog(spark, dir)
+    val n = 2 * UsageLog.FlushEvery + 5 // two batches handed to the writer + 5 buffered
+    val ids = (1 to n).map(i => log.log("search_models", s"q$i", "explore", i, 1))
+    val back = log.all().select("log_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(back == ids)
+    log.close()
+  }
+
+  test("a failed usage write surfaces on the next call, once") {
+    // the log's directory sits under a regular file: every write fails
+    val file = Files.createTempFile("graft_usage_blocker", "")
+    val log = new UsageLog(spark, file.resolve("log").toString)
+    (1 to UsageLog.FlushEvery).foreach(i => log.log("search_models", s"q$i", "", 1, 1))
+    val viaFlush = intercept[IllegalStateException](log.flush())
+    assert(viaFlush.getMessage.contains(s"${UsageLog.FlushEvery} rows not written"), viaFlush)
+    log.flush() // reported once: nothing new failed since
+
+    // a batch that fails on the writer thread is rethrown by the next log()
+    (1 to UsageLog.FlushEvery).foreach(i => log.log("search_models", s"r$i", "", 1, 1))
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var viaLog: Option[IllegalStateException] = None
+    while (viaLog.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(20)
+      try log.rate(1, 3)
+      catch { case e: IllegalStateException => viaLog = Some(e) }
+    }
+    assert(viaLog.exists(_.getMessage.contains("rows not written")), viaLog)
+  }
+
+  test("each flush writes one parquet file") {
+    val dir = Files.createTempDirectory("graft_usage").toString + "/log"
+    val log = new UsageLog(spark, dir)
+    for (flush <- 1 to 2) {
+      (1 to 8).foreach(i => log.log("search_models", s"f$flush q$i", "", 1, 1))
+      log.flush()
+    }
+    val parts = Files.list(java.nio.file.Paths.get(dir)).toArray.map(_.toString)
+      .filter(p => p.contains("part-") && p.endsWith(".parquet"))
+    assert(parts.length == 2, parts.mkString(", "))
+    assert(log.all().count() == 16)
+    log.close()
+  }
+
+  test("a serve session's usage rows are all written at exit") {
+    val root = Files.createTempDirectory("graft_serve_usage")
+    Files.createDirectories(root.resolve("target"))
+    Files.copy(java.nio.file.Paths.get(fixturePath("manifest.json")),
+      root.resolve("target/manifest.json"))
+    val requests = Seq(
+      """{"tool":"search_models","args":{"query":"orders"}}""",
+      """{"tool":"get_lineage","args":{"model_id":"model.shoply.fct_orders"}}""",
+      """{"tool":"find_models_by_path","args":{"path_pattern":"models/%"}}""",
+      "exit")
+    val buf = new java.io.ByteArrayOutputStream()
+    val code = Cli.run(spark, Seq("serve", root.toString), new java.io.PrintStream(buf, true),
+      new java.io.BufferedReader(new java.io.StringReader(requests.mkString("\n"))))
+    assert(code == 0, buf.toString)
+    val log = new UsageLog(spark, root.resolve(".graft/usage/log").toString)
+    assert(log.all().count() == 3)
+    // and the `usage` verb reads the log `serve` wrote
+    val usageOut = new java.io.ByteArrayOutputStream()
+    Cli.run(spark, Seq("usage", root.toString), new java.io.PrintStream(usageOut, true),
+      new java.io.BufferedReader(new java.io.StringReader("")))
+    assert(usageOut.toString.contains("total calls      3"), usageOut.toString)
+  }
 }
