@@ -13,7 +13,9 @@
 # PROMOTE_SIBLING=<other-strike.json> set, promotion is additionally
 # refused when any hot row (>=2 s in either strike) differs by more
 # than 2x between the two — one strike's thread/GC-timing outlier can
-# then never become the round's committed "after" unchallenged.
+# then never become the round's committed "after" unchallenged. A set
+# but missing or empty sibling refuses too: the check must never be
+# skipped silently.
 set -u
 expected_sf="$1"
 dest="$2"
@@ -40,7 +42,11 @@ case "$actual_sf" in
     exit 1
     ;;
 esac
-if [ -n "${PROMOTE_SIBLING:-}" ] && [ -s "${PROMOTE_SIBLING}" ]; then
+if [ -n "${PROMOTE_SIBLING:-}" ]; then
+  if [ ! -s "$PROMOTE_SIBLING" ]; then
+    echo "[promote] REFUSED: sibling strike $PROMOTE_SIBLING missing or empty — the outlier check cannot run; $dest left untouched" >&2
+    exit 1
+  fi
   if ! python3 - "$src" "$PROMOTE_SIBLING" <<'EOF'
 import json, sys
 a = json.load(open(sys.argv[1])).get("queries", {})

@@ -65,18 +65,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // A/B override for the [scale] parallel_appends default (the
-    // bench never loads graft.toml): SPARK_GRAFT_PARALLEL_APPENDS=0
-    // re-serializes the evolve loops' per-batch appends so the knob's
-    // effect is measurable under the bench protocol.
-    sys.env.get("SPARK_GRAFT_PARALLEL_APPENDS").foreach(v =>
-      graft.queries.IndexMaintenance.parallelAppends = v.trim == "1")
-    // Same-protocol A/B for the [scale] pipeline_overlap default (r15
-    // optimization round: upfront concurrent batch derivation +
-    // serve-answer/next-ledger overlap in the evolve loops).
-    sys.env.get("SPARK_GRAFT_PIPELINE_OVERLAP").foreach(v =>
-      graft.queries.IndexMaintenance.pipelineOverlap = v.trim == "1")
-
     // Optional comma-separated query filter for local iteration
     // (e.g. SPARK_GRAFT_BENCH_ONLY=v_quantize,t_token_stats), and an
     // exclude list for scale rehearsals (the two documented O(n²)

@@ -21,20 +21,6 @@ object Tables {
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // Scheduler mode knob (r16). FAIR-between-pools was the r15
-      // VERDICT's candidate fix for the serve-side-thread variance
-      // (Par.async pool "graft-serve" scopes the serve jobs when FAIR
-      // is on) — MEASURED AND REJECTED as the default: a back-to-back
-      // same-box A/B at sf0.1 read FAIR consistently 10-20% slower on
-      // job-floor rows (o2 0.373→0.438, ann_ivf 0.481→0.556, q1
-      // 0.820→1.011, d_incr_indexed 0.817→0.973 — including queries
-      // with NO concurrent jobs at all), i.e. the FAIR scheduler's
-      // per-job accounting costs more at local[32] than the starvation
-      // it bounds. Default stays FIFO; SPARK_GRAFT_SCHEDULER=FAIR
-      // turns the pool isolation on for deployments where serve-row
-      // latency bounds matter more than per-job floor.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FIFO"))
 
   def region(s: SparkSession, d: String)    = t(s, d, "region")
   def nation(s: SparkSession, d: String)    = t(s, d, "nation")

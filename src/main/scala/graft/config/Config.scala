@@ -135,8 +135,6 @@ final case class ScaleConfig(
     ivfPairBucket: Int = 0,
     pqCands: Int = 50,
     pqWide: Boolean = true,
-    parallelAppends: Boolean = true,
-    pipelineOverlap: Boolean = true,
     probeBucketPruneKeys: Int = 0,
     indexBuckets: Int = 32)
 
@@ -236,8 +234,6 @@ object Config {
         ivfPairBucket = int(scaleSec, "ivf_pair_bucket", 0),
         pqCands = int(scaleSec, "pq_cands", 50),
         pqWide = bool(scaleSec, "pq_wide", dflt = true),
-        parallelAppends = bool(scaleSec, "parallel_appends", dflt = true),
-        pipelineOverlap = bool(scaleSec, "pipeline_overlap", dflt = true),
         probeBucketPruneKeys = int(scaleSec, "probe_bucket_prune_keys", 0),
         indexBuckets = int(scaleSec, "index_buckets", 32)))
   }

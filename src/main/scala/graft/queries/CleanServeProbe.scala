@@ -66,18 +66,16 @@ object CleanServeProbe {
           // the proven mod-10 cohort disjointness — and (r15
           // optimization round) the index-state-independent derive
           // frames (text signals, normalized vectors, postings rows)
-          // materialize CONCURRENTLY up front under
-          // [scale] pipeline_overlap, so the ledger stage below times
-          // probes+joins only. The serve-answer/next-ledger overlap has
-          // no analogue in a one-batch decomposition; the gate p50
-          // captures it.
+          // materialize CONCURRENTLY up front, so the ledger stage
+          // below times probes+joins only. The serve-answer/next-ledger
+          // overlap has no analogue in a one-batch decomposition; the
+          // gate p50 captures it.
           val derived = CorpusClean.deriveBatch(spark, batch)
           val emRows = emB.deriveRows(batchVecs)
           val poRows = poB.deriveRows(
             batch.select(col("doc_id"), col("text")), "doc_id", "text")
           val (_, deriveSec) = timeOnce {
-            graft.util.Par.materialize(IndexMaintenance.pipelineOverlap)(
-              derived, emRows, poRows)
+            graft.util.Par.materialize(derived, emRows, poRows)
           }
           val (ledger, ledgerSec) = timeOnce {
             CorpusClean.incrLedgerDerived(spark, derived, Some((emB, emRows)),
@@ -93,13 +91,13 @@ object CleanServeProbe {
               Seq("vec_id"), "left_semi")
           }
           // The gate's append stage is ONE Par.join barrier over the
-          // five indexes ([scale] parallel_appends): the wall the gate
-          // pays is the join; the per-index numbers are each thunk's
-          // own in-flight duration (concurrent, so they overlap — the
-          // decomposition shows who the critical path is, not a sum).
+          // five indexes: the wall the gate pays is the join; the
+          // per-index numbers are each thunk's own in-flight duration
+          // (concurrent, so they overlap — the decomposition shows who
+          // the critical path is, not a sum).
           var mhAppSec, dgAppSec, emAppSec, poAppSec, ivAppSec = 0.0
           val (_, appendsWallSec) = timeOnce {
-            graft.util.Par.join(IndexMaintenance.parallelAppends)(
+            graft.util.Par.join(
               () => { mhAppSec = timeOnce {
                 mhB.appendDerived(acceptedDerived, assumeDisjoint = true) }._2 },
               () => { dgAppSec = timeOnce {

@@ -362,13 +362,12 @@ object CorpusClean {
     try {
       // Derive EVERY batch up front — the derivations (digest, minhash
       // sig/shingles, quality/langid, vector normalization) are
-      // INDEX-STATE-INDEPENDENT, so under [scale] pipeline_overlap the
-      // K batches' derive jobs materialize concurrently (max-of-K, not
-      // sum-of-K serialized inside each batch's ledger job). The
-      // ledgers themselves stay strictly ordered — each probes branch
-      // state exactly as batches < b appended it. One derivation per
-      // batch still feeds probes AND appends (r14 VERDICT #3).
-      val overlap = IndexMaintenance.pipelineOverlap
+      // INDEX-STATE-INDEPENDENT, so the K batches' derive jobs
+      // materialize concurrently (max-of-K, not sum-of-K serialized
+      // inside each batch's ledger job). The ledgers themselves stay
+      // strictly ordered — each probes branch state exactly as batches
+      // < b appended it. One derivation per batch still feeds probes
+      // AND appends (r14 VERDICT #3).
       val deriveds = (0 until k).map { b =>
         deriveBatch(s, docs.filter(
           isDelta && pmod(col("doc_id"), lit(10L * k)) === lit(10L * b)))
@@ -381,9 +380,7 @@ object CorpusClean {
             .select(col("vec_id"), col("embedding"))))
         }
       }
-      if (overlap)
-        graft.util.Par.materialize(parallel = true)(
-          (deriveds ++ emPairs.flatMap(_.map(_._2))): _*)
+      graft.util.Par.materialize((deriveds ++ emPairs.flatMap(_.map(_._2))): _*)
       val parts = (0 until k).map { b =>
         val derived = deriveds(b)
         val emPair = emPairs(b)
@@ -403,8 +400,8 @@ object CorpusClean {
         // Append EVERY batch (the standing pipeline keeps the index
         // current for the next day's delta too, not just intra-run).
         // Distinct indexes, disjoint tables — submitted concurrently
-        // ([scale] parallel_appends; the EvolveServe.cleanServe note).
-        graft.util.Par.join(IndexMaintenance.parallelAppends)(
+        // (the EvolveServe.cleanServe note).
+        graft.util.Par.join(
           (Seq(
             () => { mh.appendDerived(acceptedDerived, assumeDisjoint = true); () },
             () => { dg.appendDerived(acceptedDerived, assumeDisjoint = true); () }) ++

@@ -408,6 +408,20 @@ object Dedup {
     }
   }
 
+  /** Eagerly drop a localCheckpoint'd frame's blocks. Superseded
+    * label rounds (and the edge frames after the fixpoint) are dead
+    * the moment the next round materializes; leaving them for the
+    * async ContextCleaner lets a long-lived session accumulate dead
+    * blocks in the block manager until live working sets of LATER
+    * queries get evicted to disk (observed: the minhash kernel ran
+    * 4× slower in-suite at sf1 when it followed the cluster gates).
+    * Only ever called on frames whose data is provably never needed
+    * again — an unpersisted local checkpoint cannot be recomputed. */
+  private[queries] def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   /** Connected components over an undirected pair graph by min-label
     * propagation over the graph edges PLUS the label-pointer edges —
     * the hash-to-min move (Rastogi et al., "Finding Connected
@@ -443,40 +457,8 @@ object Dedup {
     * @return (doc_id, cluster_id = min doc_id in component,
     *         is_canonical = doc_id == cluster_id)
     */
-  /** Eagerly drop a localCheckpoint'd frame's blocks. Superseded
-    * label rounds (and the edge frames after the fixpoint) are dead
-    * the moment the next round materializes; leaving them for the
-    * async ContextCleaner lets a long-lived session accumulate dead
-    * blocks in the block manager until live working sets of LATER
-    * queries get evicted to disk (observed: the minhash kernel ran
-    * 4× slower in-suite at sf1 when it followed the cluster gates).
-    * Only ever called on frames whose data is provably never needed
-    * again — an unpersisted local checkpoint cannot be recomputed. */
-  private[queries] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-  /** @param hashToMin adds the v↔label(v) pointer edges each round
-    *   (O(log diameter) convergence); `false` is the plain
-    *   min-propagation fallback — O(diameter) rounds, same labels —
-    *   selectable at runtime via SPARK_GRAFT_CC_MODE=plain and pinned
-    *   convergent by DedupClusterSpec.
-    * @param twoHop fuse TWO propagation hops per fixpoint probe
-    *   (SPARK_GRAFT_CC_MODE=twohop): per-round cost at toy scale is
-    *   dominated by the fixed scheduling floor of the count() job, not
-    *   the joins (SURVEY §9.10 — d_embed_clusters at ×10 is six
-    *   floor-bound rounds), so halving the probes buys wall-clock even
-    *   though the join work per probe doubles. Convergence detection
-    *   stays exact: labels are min-monotone under the deterministic
-    *   hop f, so hop2 changing nothing means its input was already a
-    *   fixpoint (f(l)=l), whatever hop1 did. Labels identical to the
-    *   one-hop modes (DedupClusterSpec). */
   private[graft] def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 50,
-      hashToMin: Boolean = !sys.env.get("SPARK_GRAFT_CC_MODE").contains("plain"),
-      twoHop: Boolean = sys.env.get("SPARK_GRAFT_CC_MODE").contains("twohop"))
-      : DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     val p = pairs.localCheckpoint()
     val edges = p.toDF("src", "dst")
       .union(p.select(col("doc_b"), col("doc_a")).toDF("src", "dst"))
@@ -489,20 +471,19 @@ object Dedup {
     val touched = edges.select(col("src").as("doc_id")).distinct()
     var labels = touched.select(col("doc_id"), col("doc_id").as("cluster_id"))
       .localCheckpoint(false)
-    val ccDebug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     var converged = false
     var round = 0
-    // One propagation hop from `l`: min over graph neighbors and (in
-    // hash-to-min mode) the v↔label(v) pointer edges — every label IS
-    // a touched node's id (initial self-labels, preserved by min), so
-    // both directions resolve; label(w) ≤ w for all w, hence the extra
-    // edges are min-monotone and component-preserving. `l` is a
+    // One propagation hop from `l`: min over graph neighbors and the
+    // v↔label(v) pointer edges — every label IS a touched node's id
+    // (initial self-labels, preserved by min), so both directions
+    // resolve; label(w) ≤ w for all w, hence the extra edges are
+    // min-monotone and component-preserving. `l` is a
     // checkpoint, so the unions add no recomputation to the join.
     // Labels only ever decrease, so ONE signal detects the fixpoint:
     // the hop changed something iff some node's min-over-neighbors
     // undercut its starting label (the `chg` column).
     def hop(l: DataFrame): DataFrame = {
-      val edgesPlus = if (!hashToMin) edges else edges
+      val edgesPlus = edges
         .union(l.select(col("doc_id").as("src"), col("cluster_id").as("dst")))
         .union(l.select(col("cluster_id").as("src"), col("doc_id").as("dst")))
       val nbrMin = edgesPlus.join(l, edgesPlus("src") === l("doc_id"))
@@ -515,36 +496,22 @@ object Dedup {
         .localCheckpoint(false)
     }
     while (!converged && round < maxRounds) {
-      val roundT0 = System.nanoTime()
-      // Two-hop fusion: the intermediate hop is lazily checkpointed
-      // and materializes as the second hop's join consumes it — no
-      // fixpoint probe (count job) of its own. hop is deterministic
-      // and min-monotone, so "hop2 changed nothing" ⟺ hop2's INPUT was
-      // already a fixpoint — convergence detection is exact even when
-      // hop1 did change labels (that fused round then reports
-      // converged with the correct final labels).
-      val mid = if (twoHop) hop(labels).drop("chg") else labels
-      val next = hop(mid)
+      val next = hop(labels)
       // Fixpoint probe via count(), NOT limit(1)/isEmpty: the probe is
       // what materializes the lazy checkpoint, and a short-circuiting
       // probe leaves next's unvisited partitions as lineage — which
       // freeCheckpoint(prev) below would then make unrecomputable
       // (correct but re-derived from scratch at next use: measured 3-7×
       // round-to-round variance at sf1). count() scans every partition,
-      // so next (and mid, consumed by next's join) is FULLY
-      // materialized before the superseded blocks are freed.
+      // so next is FULLY materialized before the superseded blocks are
+      // freed.
       val changed = next.filter(col("chg")).count()
       converged = changed == 0L
       val prev = labels
       labels = next.drop("chg")
       freeCheckpoint(prev)
-      if (mid ne prev) freeCheckpoint(mid)
       round += 1
-      if (ccDebug) System.err.println(
-        f"[cc] round=$round changed=$changed twoHop=$twoHop sec=${(System.nanoTime() - roundT0) / 1e9}%.3f")
     }
-    if (ccDebug)
-      System.err.println(s"[cc] converged=$converged rounds=$round")
     require(converged, s"connectedComponents did not converge in $maxRounds rounds")
     freeCheckpoint(edges)
     freeCheckpoint(p)
@@ -778,7 +745,7 @@ object Dedup {
       .localCheckpoint()
   }
 
-  /** Hashed distinct shingle rows (doc_id, h, hm), localCheckpoint'ed.
+  /** Hashed distinct shingle rows (doc_id, h), localCheckpoint'ed.
     *
     * Checkpoint: this stage feeds four consumers (signatures, both
     * verify sides, counts) — materialize it once instead of re-running
@@ -800,7 +767,6 @@ object Dedup {
   private def hashedShingles(s: SparkSession, d: String): DataFrame =
     shingleRows(s, d)
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
-      .withColumn("hm", pmod(col("h"), lit(P)))
       .localCheckpoint(false)
 
   /** 32 minhash signature minima AND the per-doc distinct-shingle
@@ -812,18 +778,10 @@ object Dedup {
     * document; the kernel folds during the corpus scan instead — zero
     * shuffle bytes for the signature stage at any corpus size.
     * MinhashSigSpec pins bit-equality with the retired aggregation
-    * formulation ([[minhashSignaturesAgg]]). localCheckpoint'ed
+    * formulation, which it keeps as its reference. localCheckpoint'ed
     * because the band explode and the verifier's count side both read
     * it. */
-  private def minhashSignatures(s: SparkSession, d: String, sh: DataFrame): DataFrame = {
-    // SPARK_GRAFT_MINHASH_MODE=agg selects the aggregation fallback at
-    // runtime (the CC plain-mode precedent: the escape hatch is tested,
-    // not dead — MinhashSigSpec pins both formulations bit-identical,
-    // and the A/B is how the kernel's scale benefit gets measured).
-    // `sh` is the caller's already-checkpointed hashed-shingle frame,
-    // so fallback mode re-aggregates it rather than re-building it.
-    if (sys.env.get("SPARK_GRAFT_MINHASH_MODE").contains("agg"))
-      return minhashSignaturesAgg(sh).localCheckpoint(false)
+  private def minhashSignatures(s: SparkSession, d: String): DataFrame = {
     graft.functions.MinhashSig.register(s)
     val sigCols = (0 until NumPerms).map(i => col("sig")(i).as(s"m$i")) :+
       col("sig")(NumPerms).as("n")
@@ -832,15 +790,6 @@ object Dedup {
       .filter(col("sig").isNotNull)
       .select(col("doc_id") +: sigCols: _*)
       .localCheckpoint(false)
-  }
-
-  /** The retired aggregation formulation of [[minhashSignatures]],
-    * kept for the MinhashSigSpec parity pin (the oracle contract:
-    * kernel == explode+agg, bit for bit). */
-  private[graft] def minhashSignaturesAgg(sh: DataFrame): DataFrame = {
-    val sigCols = (0 until NumPerms).map(i => min(minhashPerm(col("hm"), i)).as(s"m$i")) :+
-      count(lit(1)).as("n")
-    sh.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
   }
 
   /** (doc_id, band_key) rows, hot keys capped. All 16 band keys come
@@ -899,8 +848,8 @@ object Dedup {
   // Probe accessors for [[DedupProbe]] (stage-cost diagnostics only).
   private[queries] def hashedShinglesProbe(s: SparkSession, d: String): DataFrame =
     hashedShingles(s, d)
-  private[queries] def minhashSignaturesProbe(s: SparkSession, d: String, sh: DataFrame): DataFrame =
-    minhashSignatures(s, d, sh)
+  private[queries] def minhashSignaturesProbe(s: SparkSession, d: String): DataFrame =
+    minhashSignatures(s, d)
   private[queries] def minhashBandRowsProbe(sig: DataFrame, cap: Int): DataFrame =
     minhashBandRows(sig, cap)
   private[queries] def verifyJaccardProbe(cands: DataFrame, sh: DataFrame): DataFrame =
@@ -911,7 +860,7 @@ object Dedup {
     * production, varied by BandCapSpec. */
   private[graft] def minhashLsh(s: SparkSession, d: String, cap: Int): DataFrame = {
     val sh = hashedShingles(s, d)
-    val sig = minhashSignatures(s, d, sh)
+    val sig = minhashSignatures(s, d)
     val bands = minhashBandRows(sig, cap)
     val cands = bands.as("x").join(bands.as("y"),
         col("x.band_key") === col("y.band_key") && col("x.doc_id") < col("y.doc_id"))
@@ -944,7 +893,7 @@ object Dedup {
   private[graft] def incrementalNearDup(s: SparkSession, d: String, cap: Int): DataFrame = {
     val isDelta = pmod(col("doc_id"), lit(10)) === 0
     val sh = hashedShingles(s, d)
-    val sig = minhashSignatures(s, d, sh)
+    val sig = minhashSignatures(s, d)
     val bands = minhashBandRows(sig, cap)
     val cands = bands.filter(isDelta).as("x")
       .join(bands.filter(!isDelta).as("y"), col("x.band_key") === col("y.band_key"))

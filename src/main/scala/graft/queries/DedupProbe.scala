@@ -36,7 +36,7 @@ object DedupProbe {
 
     val (sh, tSh) = time { Dedup.hashedShinglesProbe(spark, sfDir) }
     val (nSh, tShMat) = time { mat(sh) }
-    val (sig, tSig) = time { Dedup.minhashSignaturesProbe(spark, sfDir, sh) }
+    val (sig, tSig) = time { Dedup.minhashSignaturesProbe(spark, sfDir) }
     val (nSig, tSigMat) = time { mat(sig) }
     val (bands, _) = time { Dedup.minhashBandRowsProbe(sig, Dedup.MaxBandSize) }
     val (nBands, tBands) = time { mat(bands) }

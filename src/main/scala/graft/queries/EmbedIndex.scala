@@ -213,14 +213,17 @@ object EmbedIndex {
       * NEW vec_ids — ENFORCED by the disjointness guard below).
       * Bands and vectors derive scan-locally from the delta; nothing
       * corpus-sized recomputes. The two table commits submit
-      * CONCURRENTLY under `[scale] parallel_appends` (r16 — the
-      * [[MinhashIndex.Index.append]] revised recovery contract): a
-      * partial failure can strand either table, both stranded states
-      * are probe-benign (vectors without bands never become
-      * candidates; bands without vectors become candidates the
-      * verify-side vector attach drops), and the retry guard probes
-      * the UNION of both tables' id sets so either stranded state
-      * trips it loudly. Rebuild or compact to reconcile. */
+      * CONCURRENTLY (r16 — the [[MinhashIndex.Index.append]] recovery
+      * contract): a partial failure can strand either table, and
+      * neither stranded state can ADD a match (vectors without bands
+      * never become candidates; bands without vectors become
+      * candidates the verify-side vector attach drops). Bands-ahead
+      * can SUPPRESS candidates at the cap boundary: the stranded band
+      * rows still count toward the hot-band cap (`cn + dn <= cap`), so
+      * a key that sat exactly at the cap goes over it and its
+      * candidates drop until the index is rebuilt. The retry guard
+      * probes the UNION of both tables' id sets, so either stranded
+      * state trips it loudly. Rebuild to reconcile. */
     def append(newVecs: DataFrame): Index =
       appendDerived(deriveRows(newVecs))
 
@@ -251,10 +254,9 @@ object EmbedIndex {
             "compact to reconcile)")
       }
       // Disjoint tables off one checkpointed frame — concurrent jobs
-      // under [scale] parallel_appends (the MinhashIndex/PostingsIndex
-      // two-table idiom; the union guard above makes the commit order
-      // non-load-bearing).
-      graft.util.Par.join(IndexMaintenance.parallelAppends)(
+      // (the MinhashIndex/PostingsIndex two-table idiom; the union
+      // guard above makes the commit order non-load-bearing).
+      graft.util.Par.join(
         () => writeBucketed(normed.select(col("vec_id"), col("v")),
           vecsTable, "vec_id", buckets, "append"),
         () => writeBucketed(

@@ -138,13 +138,12 @@ object EvolveServe {
     var po = poBase.branch()
     val iv = ivBase.branch()
     try {
-      // Derive EVERY batch up front (r15 [scale] pipeline_overlap —
-      // the cleanServe note): postings tokenization and vector
-      // normalization are index-state-independent, so the K batches'
-      // derive jobs materialize concurrently instead of serially
-      // inside each batch's append chain. The appends themselves stay
-      // strictly ordered (each batch's answers read state ≤ b).
-      val overlap = IndexMaintenance.pipelineOverlap
+      // Derive EVERY batch up front (the cleanServe note): postings
+      // tokenization and vector normalization are
+      // index-state-independent, so the K batches' derive jobs
+      // materialize concurrently instead of serially inside each
+      // batch's append chain. The appends themselves stay strictly
+      // ordered (each batch's answers read state ≤ b).
       val poDeriveds = (0 until k).map { b =>
         po.deriveRows(
           docs.filter(isDelta && pmod(col("doc_id"), lit(10L * k)) === lit(10L * b))
@@ -159,8 +158,7 @@ object EvolveServe {
           .select(col("vec_id"), transform(col("v0"), x => x / col("nrm")).as("v"))
           .localCheckpoint(false)
       }
-      if (overlap)
-        graft.util.Par.materialize(parallel = true)((poDeriveds ++ vecRowsSeq): _*)
+      graft.util.Par.materialize((poDeriveds ++ vecRowsSeq): _*)
       // IVF probe selection hoisted out of the batch loop (r16 — see
       // serveAnswers): frozen branch centroids + corpus-cohort queries
       // make it batch-invariant; one tiny driver job replaces K
@@ -172,11 +170,10 @@ object EvolveServe {
         // per-batch corpus-id guard scans are skipped (the
         // CorpusClean.incrEvolve proof).
         // Both appends write disjoint tables of distinct indexes —
-        // submitted concurrently ([scale] parallel_appends; the
-        // cleanServe note). The join barrier completes before the
-        // serve answers read the branches.
+        // submitted concurrently (the cleanServe note). The join
+        // barrier completes before the serve answers read the branches.
         var poNext = po
-        graft.util.Par.join(IndexMaintenance.parallelAppends)(
+        graft.util.Par.join(
           () => { poNext = po.appendDerived(poDeriveds(b),
             assumeDisjoint = true); () },
           () => { iv.append(vecRowsSeq(b), assumeDisjoint = true); () })
@@ -257,17 +254,16 @@ object EvolveServe {
     val iv = ivBase.branch()
     var serve: graft.util.Par.Handle = graft.util.Par.Handle.done
     try {
-      val overlap = IndexMaintenance.pipelineOverlap
       // Derive EVERY batch up front — digests/signatures/shingles/
       // quality, postings tokenization and vector normalization are all
-      // INDEX-STATE-INDEPENDENT, so under [scale] pipeline_overlap the
-      // K batches' derive jobs materialize concurrently (max-of-K, not
-      // sum-of-K serialized inside each batch's ledger/append chain).
-      // The ledger probes themselves stay strictly ordered — they read
-      // branch state exactly as batches < b appended it. One
-      // derivation per batch still feeds probes AND appends (r14
-      // VERDICT #3); the full-batch postings rows are per-doc, so the
-      // accepted-ids semi-join below commutes with the derivation.
+      // INDEX-STATE-INDEPENDENT, so the K batches' derive jobs
+      // materialize concurrently (max-of-K, not sum-of-K serialized
+      // inside each batch's ledger/append chain). The ledger probes
+      // themselves stay strictly ordered — they read branch state
+      // exactly as batches < b appended it. One derivation per batch
+      // still feeds probes AND appends (r14 VERDICT #3); the
+      // full-batch postings rows are per-doc, so the accepted-ids
+      // semi-join below commutes with the derivation.
       val batches = (0 until k).map { b =>
         docs.filter(isDelta && pmod(col("doc_id"), lit(10L * k)) === lit(10L * b))
       }
@@ -280,9 +276,7 @@ object EvolveServe {
       }
       val poDeriveds = batches.map(b =>
         po.deriveRows(b.select(col("doc_id"), col("text")), "doc_id", "text"))
-      if (overlap)
-        graft.util.Par.materialize(parallel = true)(
-          (deriveds ++ emRowsSeq ++ poDeriveds): _*)
+      graft.util.Par.materialize((deriveds ++ emRowsSeq ++ poDeriveds): _*)
       // IVF probe selection hoisted out of the batch loop (r16 — see
       // serveAnswers): frozen branch centroids + corpus-cohort queries
       // make it batch-invariant.
@@ -292,10 +286,10 @@ object EvolveServe {
         val derived = deriveds(b)
         val emRows = emRowsSeq(b)
         // Eager: the ledger must see exactly batches < b's survivors —
-        // the appends below mutate the branch views it reads. Under
-        // pipeline_overlap it materializes CONCURRENTLY with batch
-        // b-1's still-running serve answers (disjoint branch sets:
-        // ledger reads cleaning indexes, answers read serving indexes).
+        // the appends below mutate the branch views it reads. It
+        // materializes CONCURRENTLY with batch b-1's still-running
+        // serve answers (disjoint branch sets: ledger reads cleaning
+        // indexes, answers read serving indexes).
         // assumeSmallDelta/assumeDisjoint: the batch is delta/k-sized
         // and its ids are provably disjoint from every index's cohort
         // (doc_id ≡ 0 mod 10 vs the ≢ 0 cohorts; mutually distinct
@@ -312,13 +306,12 @@ object EvolveServe {
         // materialized before this batch's appends mutate the branches.
         serve.await()
         // The five appends write disjoint tables of distinct indexes —
-        // submitted concurrently ([scale] parallel_appends): the stage
-        // is per-job-latency-bound (~10 tiny jobs serialized), so wall
-        // collapses to the longest single index's chain (the postings
-        // stats merge). The join barrier completes before the serve
+        // submitted concurrently: the stage is per-job-latency-bound
+        // (~10 tiny jobs serialized), so wall collapses to the longest
+        // single index's chain (the postings stats merge). The join barrier completes before the serve
         // answers read the branches.
         var poNext = po
-        graft.util.Par.join(IndexMaintenance.parallelAppends)(
+        graft.util.Par.join(
           () => { mh.appendDerived(acceptedDerived, assumeDisjoint = true); () },
           () => { dg.appendDerived(acceptedDerived, assumeDisjoint = true); () },
           () => { em.appendDerived(acceptedVecRows, assumeDisjoint = true); () },
@@ -339,16 +332,11 @@ object EvolveServe {
         Dedup.freeCheckpoint(ledger)
         // Answers are eagerly checkpointed BEFORE the next batch's
         // append mutates the branch views ([[CorpusClean.incrEvolve]]
-        // discipline) — under pipeline_overlap the materialization runs
-        // on a side thread, overlapped with the next batch's ledger;
-        // serve.await() above is the ordering barrier. The side
-        // thread's jobs are tagged with the `graft-serve` pool (Par.async
-        // scopes it to the side thread). The pool only takes effect under
-        // SPARK_GRAFT_SCHEDULER=FAIR, where it bounds mutual starvation
-        // against the concurrent ledger jobs; Tables.configure's default
-        // scheduler is FIFO.
+        // discipline) — the materialization runs on a side thread,
+        // overlapped with the next batch's ledger; serve.await() above
+        // is the ordering barrier.
         val poNow = po
-        serve = graft.util.Par.async(overlap, pool = "graft-serve")(() => {
+        serve = graft.util.Par.async(() => {
           answers(b) = serveAnswers(b, poNow, iv, CleanServeAnnPred,
             probes = Some(probes)).localCheckpoint()
           ()

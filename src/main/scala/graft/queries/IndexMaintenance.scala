@@ -41,38 +41,6 @@ object IndexMaintenance {
   @volatile var ivfFitCheckEvery: Int = 0
   @volatile var ivfRetrainBelowCos: Double = 0.0
 
-  /** Concurrent submission of a batch's per-index appends
-    * (`[scale] parallel_appends`, default ON — semantics-preserving by
-    * construction, see [[graft.util.Par]]): the evolve/serve loops'
-    * five appends write disjoint tables of distinct indexes, so the
-    * only thing serialization buys is wall-clock. */
-  @volatile var parallelAppends: Boolean = true
-
-  /** Overlap INDEPENDENT stages of the standing evolve/serve loops
-    * (`[scale] pipeline_overlap`, default ON — r15 optimization
-    * round). Two semantics-preserving overlaps, both the
-    * [[graft.util.Par]] concurrent-job-submission argument:
-    *
-    *   1. batch DERIVATION is index-state-independent (text digests/
-    *      signatures/shingles/quality, postings tokenization, vector
-    *      normalization), so every batch's derived frames materialize
-    *      CONCURRENTLY up front instead of serially inside each
-    *      batch's ledger/append chain;
-    *   2. in the composed clean+serve closure, `serveAnswers(b)` reads
-    *      only the SERVING branches (postings/IVF) while batch b+1's
-    *      ledger reads only the CLEANING branches (digest/minhash/
-    *      embed) plus raw parquet — disjoint state, so the answer
-    *      materialization runs concurrently with the next ledger. The
-    *      barrier before batch b+1's APPENDS still awaits the
-    *      in-flight serve — appends mutate the serving branches the
-    *      answers read, so answer b is fully materialized first.
-    *
-    * Results are frame-identical either way; the knob exists so the
-    * effect is A/B-measurable under the bench protocol
-    * (`SPARK_GRAFT_PIPELINE_OVERLAP`), the [[parallelAppends]]
-    * pattern. */
-  @volatile var pipelineOverlap: Boolean = true
-
   /** Bucket-prune the probes' corpus band/digest table scans to the
     * delta's key set (`[scale] probe_bucket_prune_keys`, default 0 =
     * off — the gate-pinned full-scan shape): when a probe's distinct
@@ -102,8 +70,6 @@ object IndexMaintenance {
     compactEveryAppends = cfg.scale.compactEveryAppends
     ivfFitCheckEvery = cfg.scale.ivfFitCheckEvery
     ivfRetrainBelowCos = cfg.scale.ivfRetrainBelowCos
-    parallelAppends = cfg.scale.parallelAppends
-    pipelineOverlap = cfg.scale.pipelineOverlap
     probeBucketPruneKeys = cfg.scale.probeBucketPruneKeys
     indexBuckets = cfg.scale.indexBuckets
   }

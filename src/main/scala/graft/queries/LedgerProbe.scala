@@ -51,7 +51,7 @@ object LedgerProbe {
           val derived = CorpusClean.deriveBatch(spark, batch)
           val emRows = emB.deriveRows(batchVecs)
           time("derive (text+vec)") {
-            graft.util.Par.materialize(IndexMaintenance.pipelineOverlap)(derived, emRows)
+            graft.util.Par.materialize(derived, emRows)
           }
           val hint = Some(true)
           time("dg.probeDerived alone") {

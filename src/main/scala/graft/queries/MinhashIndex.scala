@@ -260,22 +260,23 @@ object MinhashIndex {
       * immediately.
       *
       * The two table commits are not atomic, and since r16 they SUBMIT
-      * CONCURRENTLY under `[scale] parallel_appends` (the PostingsIndex
-      * two-table idiom): a failure between/among them can leave EITHER
-      * table ahead. Both stranded states are probe-benign — arrays
-      * without bands never become candidates; bands without arrays
-      * become candidates whose verify-side array attach drops them —
-      * i.e. the doc is "not yet discoverable" either way, exactly the
-      * former arrays-first outcome. What the old serialized order
-      * really bought was a CHEAPER RETRY GUARD (arrays' id set was
-      * provably a superset of bands'); with concurrent commits the
-      * guard probes the UNION of both tables' id sets instead, so a
-      * retry after any partial failure still trips loudly rather than
-      * double-writing rows (a silent bands double-write would inflate
-      * the probe's hot-cap counts — a results risk, not just bloat).
-      * Recovery after a tripped guard: rebuild or compact, the
-      * PostingsIndex contract. MinhashAppendRecoverySpec pins the
-      * guard against both stranded-table states. */
+      * CONCURRENTLY (the PostingsIndex two-table idiom): a failure
+      * between/among them can leave EITHER table ahead. Neither
+      * stranded state can ADD a match: arrays without bands never
+      * become candidates, and bands without arrays become candidates
+      * whose verify-side array attach drops them. Arrays-ahead is
+      * fully probe-benign. Bands-ahead can SUPPRESS candidates at the
+      * cap boundary: the stranded band rows still count toward the
+      * hot-band cap (`cn + dn <= cap`), so a key that sat exactly at
+      * the cap goes over it and the probe drops every candidate on
+      * that key — a delta doc can miss a match a clean index reports,
+      * until the index is rebuilt. The guard probes the UNION of both
+      * tables' id sets, so a retry after any partial failure trips
+      * loudly rather than double-writing rows (a silent bands
+      * double-write would inflate the hot-cap counts for good).
+      * Recovery after a tripped guard: rebuild, which drops the
+      * stranded rows. MinhashAppendRecoverySpec pins the guard against
+      * both stranded-table states and the cap-boundary case. */
     def append(newDocs: DataFrame): Index =
       appendDerived(deriveRows(newDocs))
 
@@ -310,13 +311,13 @@ object MinhashIndex {
             "compact to reconcile)")
       }
       // Disjoint tables off one checkpointed frame — submitted as
-      // concurrent jobs under [scale] parallel_appends (the
-      // PostingsIndex.appendDerived idiom; the union guard above is
-      // what makes the commit order non-load-bearing). The append wall
+      // concurrent jobs (the PostingsIndex.appendDerived idiom; the
+      // union guard above is what makes the commit order
+      // non-load-bearing). The append wall
       // was the serialized arrays-write → bands-write chain, ~2× one
       // bucketed-write commit (CLEAN_SERVE_BUDGET.json
       // minhash_append_sec 1.24 vs digest's single-table 0.54).
-      graft.util.Par.join(IndexMaintenance.parallelAppends)(
+      graft.util.Par.join(
         () => writeBucketed(sigged.select(col("doc_id"), col("hs")),
           arraysTable, "doc_id", buckets, "append"),
         () => writeBucketed(

@@ -153,8 +153,8 @@ final class PostingsIndex private (
     // Stats ∥ writes (r16; was stats-then-writes): the scalar agg and
     // the two DISJOINT table writes are three independent jobs over the
     // same two lazily-checkpointed delta frames, so all three submit
-    // concurrently under [scale] parallel_appends and the append wall
-    // collapses from stats + max(write) to max(stats, writes).
+    // concurrently and the append wall collapses from
+    // stats + max(write) to max(stats, writes).
     // Concurrent first materialization of a lazy localCheckpoint is
     // block-level-locked (getOrElseUpdate: one job computes a
     // partition, the others read the cached block), so each partition
@@ -163,7 +163,7 @@ final class PostingsIndex private (
     // merged stats die with the session — rebuild-or-compact is the
     // recovery in all orders.
     var stats: org.apache.spark.sql.Row = null
-    graft.util.Par.join(graft.queries.IndexMaintenance.parallelAppends)(
+    graft.util.Par.join(
       () => { stats = deltaDocs
         .agg(count(lit(1)).as("n"), sum(col("doclen")).as("len")).collect().head },
       // The delta rides Bm25.postings' groupBy partitioning — no extra

@@ -3,7 +3,7 @@ package graft.util
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 /** Concurrent Spark-job submission for INDEPENDENT per-batch index
-  * appends (`[scale] parallel_appends`, default on).
+  * appends.
   *
   * The standing evolve/serve pipelines append each batch's survivors
   * to up to five persisted indexes (digest, minhash, embed bands,
@@ -40,59 +40,34 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   */
 object Par {
 
-  /** Run `thunks` to completion — concurrently on a fresh
-    * one-thread-per-thunk pool when `parallel` (the pool threads are
-    * created by the calling thread, so Spark's inheritable
-    * thread-locals — job group, scheduler pool, local properties —
-    * carry over), sequentially in order otherwise. Awaits ALL thunks
-    * either way; if any failed, rethrows the FIRST failure (by thunk
-    * order) after the last thunk has finished. */
-  /** Fully materialize lazily-checkpointed frames — concurrently when
-    * `parallel` (r15 `[scale] pipeline_overlap`): each traversal
-    * computes every partition, persisting the frame's localCheckpoint
-    * blocks, so K batches' index-state-independent derivations cost
-    * max-of-K instead of sum-of-K on the standing pipelines' walls. */
-  def materialize(parallel: Boolean)(dfs: org.apache.spark.sql.DataFrame*): Unit =
-    join(parallel)(dfs.map(df => () => { df.queryExecution.toRdd.count(); () }): _*)
+  /** Fully materialize lazily-checkpointed frames concurrently: each
+    * traversal computes every partition, persisting the frame's
+    * localCheckpoint blocks, so K batches' index-state-independent
+    * derivations cost max-of-K instead of sum-of-K on the standing
+    * pipelines' walls. */
+  def materialize(dfs: org.apache.spark.sql.DataFrame*): Unit =
+    join(dfs.map(df => () => { df.queryExecution.toRdd.count(); () }): _*)
 
   /** One asynchronously-running thunk with join-and-rethrow semantics —
     * the one-sided [[join]], for overlapping a Spark-job-submitting
     * stage (a serve-answer materialization) with the caller's next
-    * stage (the following batch's cleaning ledger). When `parallel` is
-    * false the thunk runs SYNCHRONOUSLY before `async` returns — the
-    * serialized order is byte-identical to the pre-overlap code path.
+    * stage (the following batch's cleaning ledger).
     * [[Handle.await]] rethrows the thunk's failure — on EVERY await
     * (the failure is kept, not consumed: a caller that catches the
     * first throw and awaits again, or two independent awaiters, must
     * never observe a spurious success — r15 ADVICE);
     * [[Handle.awaitQuietly]] only joins (for cleanup paths that must
-    * not mask the primary failure). Both are idempotent joins.
-    *
-    * `pool` (optional) names a scheduler pool for the side thread's
-    * jobs (`spark.scheduler.pool` is an inheritable thread-local, so
-    * setting it inside the new thread scopes it to that thread's jobs
-    * alone). Under `spark.scheduler.mode=FAIR` this bounds mutual
-    * starvation between the side thread's jobs and the caller's — the
-    * r15 overlap introduced 2–5× run-to-run variance on the serve rows
-    * when one thread's job queue could starve the other's under FIFO
-    * (r15 VERDICT "what's wrong" #3). Ignored when the thunk runs
-    * synchronously (there is no concurrency to schedule). */
-  def async(parallel: Boolean, pool: String = null)(thunk: () => Unit): Handle =
-    if (!parallel) { thunk(); Handle.done }
-    else {
-      val h = new Handle(thunk, pool)
-      h.thread.start()
-      h
-    }
+    * not mask the primary failure). Both are idempotent joins. */
+  def async(thunk: () => Unit): Handle = {
+    val h = new Handle(thunk)
+    h.thread.start()
+    h
+  }
 
-  final class Handle private[Par] (thunk: () => Unit, pool: String = null) {
+  final class Handle private[Par] (thunk: () => Unit) {
     @volatile private var failure: Throwable = null
     private[Par] val thread: Thread = if (thunk == null) null else
       new Thread(() => {
-        if (pool != null)
-          org.apache.spark.sql.SparkSession.getActiveSession
-            .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-            .foreach(_.sparkContext.setLocalProperty("spark.scheduler.pool", pool))
         try thunk() catch { case t: Throwable => failure = t }
       }, "graft-par-async")
     def awaitQuietly(): Unit = if (thread != null) {
@@ -116,8 +91,14 @@ object Par {
   }
   object Handle { val done = new Handle(null) }
 
-  def join(parallel: Boolean)(thunks: (() => Unit)*): Unit = {
-    if (thunks.sizeIs <= 1 || !parallel) { thunks.foreach(_()); return }
+  /** Run `thunks` to completion concurrently on a fresh
+    * one-thread-per-thunk pool (the pool threads are created by the
+    * calling thread, so Spark's inheritable thread-locals — job group,
+    * local properties — carry over); a single thunk runs inline.
+    * Awaits ALL thunks; if any failed, rethrows the FIRST failure (by
+    * thunk order) after the last thunk has finished. */
+  def join(thunks: (() => Unit)*): Unit = {
+    if (thunks.sizeIs <= 1) { thunks.foreach(_()); return }
     val pool = Executors.newFixedThreadPool(thunks.size)
     try {
       val futures = thunks.map(t => pool.submit(new Callable[Unit] {

@@ -36,7 +36,6 @@ class ConfigSpec extends SparkSuite {
       |embed_rotations = 8
       |ivf_fit_check_every = 100
       |ivf_retrain_below_cos = 0.8
-      |parallel_appends = false
       |probe_bucket_prune_keys = 4096
       |""".stripMargin
 
@@ -120,9 +119,8 @@ class ConfigSpec extends SparkSuite {
     assert(cfg.scale.ivfRetrainBelowCos == 0.8)
     assert(cfg.scale.compactEveryAppends == 0, "unset cadence stays off")
     assert(cfg.scale.embedActCos == 0.9, "unset acting tier keeps the gate-pinned 0.9")
-    // round 15: concurrent appends (bool, default true) and probe
-    // bucket pruning (int, default 0 = off) both reach the config.
-    assert(!cfg.scale.parallelAppends, "explicit false overrides the on-default")
+    // round 15: probe bucket pruning (int, default 0 = off) reaches
+    // the config.
     assert(cfg.scale.probeBucketPruneKeys == 4096)
     assert(cfg.scale.indexBuckets == 32, "unset bucket sizing keeps the gate layout")
   }
@@ -150,7 +148,6 @@ class ConfigSpec extends SparkSuite {
     assert(cfg.scale.pqCands == 50)
     assert(cfg.scale.pqWide, "the preset serves the measured G8 recall rung")
     assert(cfg.scale.ivfPairBucket == 512)
-    assert(cfg.scale.parallelAppends, "the preset overlaps per-batch appends")
     assert(cfg.scale.probeBucketPruneKeys == 512,
       "the preset cap equals the index_buckets/4 win-condition clamp")
     assert(cfg.scale.indexBuckets == 2048, "the preset sizes buckets for TB-scale corpora")

@@ -40,42 +40,6 @@ class DedupClusterSpec extends SparkSuite {
     assert((1L to 64L).forall(cc(_) == 1L), "whole chain is one cluster rooted at 1")
   }
 
-  test("plain mode (SPARK_GRAFT_CC_MODE=plain fallback) converges to the same labels") {
-    import spark.implicits._
-    // Same graph as the first test. Plain min-propagation is
-    // O(diameter) rounds — the 1-2-3-4-5 chain needs ~5 — but must
-    // land on identical labels; this pins the runtime escape hatch.
-    val nodes = (1L to 9L).toDF("doc_id")
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (6L, 7L))
-      .toDF("doc_a", "doc_b")
-    val fast = Dedup.connectedComponents(nodes, pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
-    val plain = Dedup.connectedComponents(nodes, pairs, hashToMin = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
-    assert(plain == fast, "plain fallback must produce identical clustering")
-  }
-
-  test("two-hop mode (SPARK_GRAFT_CC_MODE=twohop) halves the probes, same labels") {
-    import spark.implicits._
-    // 64-chain: hash-to-min needs <=8 one-hop rounds (previous test);
-    // fusing two hops per fixpoint probe must land inside 5 fused
-    // rounds — and on identical labels.
-    val nodes = (1L to 64L).toDF("doc_id")
-    val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(nodes, pairs, maxRounds = 5, twoHop = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 64L).forall(cc(_) == 1L), "whole chain is one cluster rooted at 1")
-    // mixed graph (chain + pair + singletons): label-for-label equality
-    // with the default mode, including the is_canonical flags
-    val n9 = (1L to 9L).toDF("doc_id")
-    val p9 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (6L, 7L))
-      .toDF("doc_a", "doc_b")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
-    assert(rows(Dedup.connectedComponents(n9, p9, twoHop = true)) ==
-      rows(Dedup.connectedComponents(n9, p9)))
-  }
-
   test("connected components: maxRounds guard throws instead of returning unconverged labels") {
     import spark.implicits._
     val nodes = (1L to 4L).toDF("doc_id")

@@ -7,12 +7,14 @@ import graft.queries.{EmbedIndex, MinhashIndex}
 /** Crash-recovery contract of the CONCURRENT two-table appends (r16):
   * MinhashIndex/EmbedIndex submit their two disjoint table writes as
   * concurrent jobs, so a failure between/among commits can strand
-  * EITHER table ahead. The contract is (a) both stranded states are
-  * probe-benign — the probe answers exactly what an index without the
-  * stranded rows answers — and (b) a RETRY of the failed append trips
-  * the disjointness guard loudly whichever table landed first (the
-  * union-of-both-id-sets guard this spec exists to pin; the former
-  * arrays-first serialized order only ever guarded one direction). */
+  * EITHER table ahead. The contract is (a) a stranded state never adds
+  * a match: below the hot-band cap the probe answers exactly what an
+  * index without the stranded rows answers, and at the cap boundary
+  * stranded band rows can only suppress matches (they still count
+  * toward the cap); and (b) a RETRY of the failed append trips the
+  * disjointness guard loudly whichever table landed first (the
+  * union-of-both-id-sets guard; the former arrays-first serialized
+  * order only ever guarded one direction). */
 class MinhashAppendRecoverySpec extends SparkSuite {
 
   private val d = "/root/testdata/sf0.001"
@@ -58,6 +60,39 @@ class MinhashAppendRecoverySpec extends SparkSuite {
       assert(rows(idx.probe(deltaDocs)) == before,
         "bands-ahead must be probe-benign (candidates with no verify-side array drop)")
       val e = intercept[IllegalArgumentException] { idx.append(half2) }
+      assert(e.getMessage.contains("disjointness"))
+    } finally { idx.drop(); full.drop() }
+  }
+
+  test("minhash: stranded BANDS at the hot-band cap only suppress matches; retry trips the guard") {
+    import spark.implicits._
+    val text = "the quick brown fox jumps over the lazy dog by the river bank"
+    val corpus = Seq((1L, text)).toDF("doc_id", "text")
+    val stranded = Seq((2L, text)).toDF("doc_id", "text")
+    val delta = Seq((100L, text)).toDF("doc_id", "text")
+    // Identical texts share all 16 band keys. Before the crash: per key
+    // one corpus row + one delta row, exactly at cap = 2, so doc 100
+    // matches doc 1.
+    val cap = 2
+    val idx = MinhashIndex.fresh(spark, "rec-cap", corpus)
+    val full = MinhashIndex.fresh(spark, "rec-cap-full", corpus.union(stranded))
+    def matches(): Set[(Long, Long)] =
+      idx.probe(delta, cap = cap).filter(!col("is_new")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      val cleanMatches = matches()
+      assert(cleanMatches == Set((100L, 1L)))
+      // Simulate a crash that committed ONLY doc 2's band rows.
+      idx.writeBucketed(
+        full.bands.join(stranded.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+        idx.tableName, "band_key", idx.buckets, "append")
+      val strandedMatches = matches()
+      assert(strandedMatches.subsetOf(cleanMatches),
+        "a stranded state must never add a match")
+      // The documented caveat: doc 2's orphan band rows push every key
+      // over the cap, so the match on doc 1 is suppressed.
+      assert(strandedMatches.isEmpty)
+      val e = intercept[IllegalArgumentException] { idx.append(stranded) }
       assert(e.getMessage.contains("disjointness"))
     } finally { idx.drop(); full.drop() }
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{MinhashSig, TextHash}
@@ -15,6 +16,15 @@ class MinhashSigSpec extends SparkSuite {
 
   private val d = "/root/testdata/sf0.001"
 
+  /** The retired aggregation formulation over hashed shingle rows
+    * (doc_id, hm = h mod P): 32 × min of the affine permutations plus
+    * the distinct-shingle count — the reference the kernel must equal. */
+  private def minhashSignaturesAgg(sh: DataFrame): DataFrame = {
+    val sigCols = (0 until MinhashSig.NumPerms)
+      .map(i => min(TextHash.minhashPerm(col("hm"), i)).as(s"m$i")) :+ count(lit(1)).as("n")
+    sh.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
+  }
+
   test("graft_minhash equals the aggregation formulation bit for bit") {
     MinhashSig.register(spark)
     val docs = Tables.documents(spark, d)
@@ -22,7 +32,7 @@ class MinhashSigSpec extends SparkSuite {
       .select(col("doc_id"), explode(shingles(tokens(col("text")), 3)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
       .withColumn("hm", pmod(col("h"), lit(TextHash.P)))
-    val agg = graft.queries.Dedup.minhashSignaturesAgg(sh).collect()
+    val agg = minhashSignaturesAgg(sh).collect()
       .map(r => r.getLong(0) -> (1 to 33).map(r.getLong).toVector).toMap
     val kernel = docs
       .select(col("doc_id"), expr("graft_minhash(text)").as("sig"))

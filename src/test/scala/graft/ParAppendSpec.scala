@@ -4,14 +4,14 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{DigestIndex, IndexMaintenance, MinhashIndex}
+import graft.queries.{DigestIndex, MinhashIndex}
 import graft.util.Par
 
-/** Contract of the concurrent append barrier (`[scale]
-  * parallel_appends` → [[graft.util.Par.join]]): parallel submission
-  * of distinct indexes' appends is semantics-preserving (probes equal
-  * the sequential path), the join awaits EVERY thunk before returning
-  * or rethrowing, and the first failure propagates. */
+/** Contract of the concurrent append barrier ([[graft.util.Par.join]]):
+  * parallel submission of distinct indexes' appends is
+  * semantics-preserving (probes equal the appends run one after the
+  * other), the join awaits EVERY thunk before returning or rethrowing,
+  * and the first failure propagates. */
 class ParAppendSpec extends SparkSuite {
 
   import spark.implicits._
@@ -28,9 +28,10 @@ class ParAppendSpec extends SparkSuite {
       val dg = DigestIndex.fresh(spark, s"parspec-dg-$tag", corpus)
       val mh = MinhashIndex.fresh(spark, s"parspec-mh-$tag", corpus)
       try {
-        Par.join(parallel)(
+        val appends = Seq(
           () => { dg.append(delta); () },
           () => { mh.append(delta); () })
+        if (parallel) Par.join(appends: _*) else appends.foreach(_())
         val dgRows = dg.probe(probe).orderBy(col("doc_id")).collect()
           .map(r => (r.getLong(0), r.getBoolean(2))).toSeq
         val mhRows = mh.probe(probe).orderBy(col("doc_id")).collect()
@@ -48,17 +49,18 @@ class ParAppendSpec extends SparkSuite {
   }
 
   test("join runs every thunk exactly once, parallel and sequential") {
-    for (parallel <- Seq(true, false)) {
+    // 5 thunks run on the pool; 1 thunk (and none) take the inline path
+    for (k <- Seq(5, 1, 0)) {
       val n = new AtomicInteger(0)
-      Par.join(parallel)((1 to 5).map(_ => () => { n.incrementAndGet(); () }): _*)
-      assert(n.get() == 5)
+      Par.join((1 to k).map(_ => () => { n.incrementAndGet(); () }): _*)
+      assert(n.get() == k)
     }
   }
 
   test("a failing thunk propagates AFTER every sibling completed") {
     val done = new AtomicInteger(0)
     val e = intercept[IllegalStateException] {
-      Par.join(parallel = true)(
+      Par.join(
         () => throw new IllegalStateException("boom"),
         () => { Thread.sleep(50); done.incrementAndGet(); () },
         () => { Thread.sleep(50); done.incrementAndGet(); () })
@@ -67,17 +69,5 @@ class ParAppendSpec extends SparkSuite {
     // the join barrier awaited the slow siblings before rethrowing —
     // no append job is still in flight when the caller's finally runs
     assert(done.get() == 2)
-  }
-
-  test("the [scale] knob reaches the flag") {
-    val before = IndexMaintenance.parallelAppends
-    try {
-      IndexMaintenance.configure(graft.config.EngineConfig(
-        scale = graft.config.ScaleConfig(parallelAppends = false)))
-      assert(!IndexMaintenance.parallelAppends)
-      IndexMaintenance.configure(graft.config.EngineConfig(
-        scale = graft.config.ScaleConfig(parallelAppends = true)))
-      assert(IndexMaintenance.parallelAppends)
-    } finally IndexMaintenance.parallelAppends = before
   }
 }

@@ -4,39 +4,22 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.IndexMaintenance
 import graft.search.PostingsIndex
 import graft.util.Par
 
-/** Contract of the r15 `[scale] pipeline_overlap` optimizations:
-  * upfront concurrent batch derivation + serve-answer/next-ledger
-  * overlap are FRAME-IDENTICAL to the serialized path (the knob only
-  * reorders job submission of provably independent stages), the
-  * pre-derived postings append path equals the classic text append,
-  * and the [[Par.async]] one-sided barrier keeps join-and-rethrow
-  * semantics.
+/** Contract of the standing pipelines' stage overlap (upfront
+  * concurrent batch derivation + serve-answer/next-ledger overlap):
+  * the pre-derived postings append path equals the classic text
+  * append, and the [[Par.async]] one-sided barrier keeps
+  * join-and-rethrow semantics. The overlapped answers themselves are
+  * pinned against fresh rebuilds by EvolveServeSpec and the
+  * `pipe_incr_clean_serve` oracle.
   */
 class PipelineOverlapSpec extends SparkSuite {
 
   import spark.implicits._
 
   private val d = "/root/testdata/sf0.001"
-
-  test("cleanServe: pipeline_overlap on == off (row-identical answers)") {
-    val before = IndexMaintenance.pipelineOverlap
-    def run(): Seq[String] =
-      SparkEntry.queries("pipe_incr_clean_serve")(spark, d)
-        .collect().map(_.toString).toSeq
-    try {
-      IndexMaintenance.pipelineOverlap = false
-      val serial = run()
-      IndexMaintenance.pipelineOverlap = true
-      val overlapped = run()
-      assert(serial.nonEmpty)
-      assert(overlapped == serial,
-        "overlapped clean+serve answers differ from the serialized path")
-    } finally IndexMaintenance.pipelineOverlap = before
-  }
 
   test("postings appendDerived(pre-derived semi-join) == append(filtered docs)") {
     val corpus = Seq((1L, "alpha beta gamma"), (2L, "beta delta"))
@@ -57,7 +40,7 @@ class PipelineOverlapSpec extends SparkSuite {
     // per-doc rows make the filter commute with the derivation.
     val derivedIdx = PostingsIndex.of(corpus, "doc_id", "text", s"ovl-derived-$run")
     val preDerived = derivedIdx.deriveRows(batch, "doc_id", "text")
-    Par.materialize(parallel = true)(preDerived)
+    Par.materialize(preDerived)
     val derived = derivedIdx.appendDerived(
       preDerived.join(accepted, Seq("doc"), "left_semi"))
     try {
@@ -68,31 +51,24 @@ class PipelineOverlapSpec extends SparkSuite {
   }
 
   test("async: sync mode runs inline; parallel mode joins and rethrows") {
+    // The synchronous path of the barrier: a single thunk runs inline
+    // on the calling thread, before join returns.
+    val caller = Thread.currentThread()
+    var ranOn: Thread = null
+    Par.join(() => { ranOn = Thread.currentThread(); () })
+    assert(ranOn eq caller, "a single thunk must run inline")
+    Par.Handle.done.await() // the nothing-in-flight handle is a no-op join
+
     val n = new AtomicInteger(0)
-    val h = Par.async(parallel = false)(() => { n.incrementAndGet(); () })
-    assert(n.get() == 1, "sync async must run before returning")
-    h.await() // no-op handle
+    val h = Par.async(() => { Thread.sleep(30); n.incrementAndGet(); () })
+    h.await()
+    assert(n.get() == 1)
+    h.await() // idempotent
 
-    val h2 = Par.async(parallel = true)(() => { Thread.sleep(30); n.incrementAndGet(); () })
-    h2.await()
-    assert(n.get() == 2)
-    h2.await() // idempotent
-
-    val h3 = Par.async(parallel = true)(() => throw new IllegalStateException("boom"))
-    val e = intercept[IllegalStateException](h3.await())
-    assert(e.getMessage == "boom")
-    h3.awaitQuietly() // quiet join never throws
-  }
-
-  test("the [scale] knob reaches the flag") {
-    val before = IndexMaintenance.pipelineOverlap
-    try {
-      IndexMaintenance.configure(graft.config.EngineConfig(
-        scale = graft.config.ScaleConfig(pipelineOverlap = false)))
-      assert(!IndexMaintenance.pipelineOverlap)
-      IndexMaintenance.configure(graft.config.EngineConfig(
-        scale = graft.config.ScaleConfig(pipelineOverlap = true)))
-      assert(IndexMaintenance.pipelineOverlap)
-    } finally IndexMaintenance.pipelineOverlap = before
+    val h2 = Par.async(() => throw new IllegalStateException("boom"))
+    assert(intercept[IllegalStateException](h2.await()).getMessage == "boom")
+    assert(intercept[IllegalStateException](h2.await()).getMessage == "boom",
+      "a failure is kept, not consumed by the first await")
+    h2.awaitQuietly() // quiet join never throws
   }
 }
