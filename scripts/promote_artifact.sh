@@ -16,6 +16,11 @@
 # then never become the round's committed "after" unchallenged. A set
 # but missing or empty sibling refuses too: the check must never be
 # skipped silently.
+#
+# Load check: the source must carry the `"load":{...,"quiet":true}`
+# stamp graft.Bench writes (quiet start, no foreign JVM, load in the
+# envelope at the end). A loaded strike, or one with no stamp at all,
+# refuses: its timings measure the box, not the code.
 set -u
 expected_sf="$1"
 dest="$2"
@@ -35,6 +40,15 @@ import json, sys
 print(json.load(open(sys.argv[1])).get("sf", ""))
 EOF
 )"
+quiet="$(python3 - "$src" <<'EOF'
+import json, sys
+print(json.load(open(sys.argv[1])).get("load", {}).get("quiet") is True)
+EOF
+)"
+if [ "$quiet" != "True" ]; then
+  echo "[promote] REFUSED: $src is not stamped load.quiet=true (loaded or unguarded strike) — $dest left untouched" >&2
+  exit 1
+fi
 case "$actual_sf" in
   *"$expected_sf"*) ;;
   *)

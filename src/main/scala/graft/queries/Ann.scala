@@ -40,7 +40,7 @@ object Ann {
   // IvfIndex.Sq8Scale) and the gate-pinned candidate pool width — 50
   // candidates per query feed the exact rerank. Production sizes the
   // pool via `[scale] sq8_cands` ([[ScaleOps.annSq8]]); the
-  // recall-vs-pool trade is measured by [[graft.Sq8PoolSweep]].
+  // recall-vs-pool trade is measured in `BENCH_sq8.json`.
   private val Sq8Scale = IvfIndex.Sq8Scale
   private[queries] val Sq8Cands = 50
   private[queries] val KMeansIters = 2 // Lloyd iterations from the seed centroids
@@ -99,12 +99,6 @@ object Ann {
     corpusIdx(s, d)
       .assigned.select(col("vec_id"), col("v"))
   }
-
-  /** [[persistedVecs]] for the measurement mains ([[graft.Sq8PoolSweep]]'s
-    * brute-force truth reads the same persisted geometry the SQ8 route
-    * ranks, so recall is apples-to-apples). */
-  private[graft] def persistedVecsFor(s: SparkSession, d: String): DataFrame =
-    persistedVecs(s, d)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -289,8 +283,7 @@ object Ann {
     // engines replay the identical quantized Lloyd loop, so the
     // candidate set — and hence the gate — is exact despite partial
     // recall. Recall vs the brute-force truth and candidate cost at
-    // scale are measured by graft.EmbedIvfRecall into
-    // BENCH_embed_bands.json (§9.12).
+    // scale are measured in BENCH_embed_ivf.json (§9.12).
     "d_embed_neardup_ivf" -> ((s, d) => {
       DotProduct.register(s)
       val idx = corpusIdx(s, d)
@@ -318,7 +311,7 @@ object Ann {
 
   /** The IVF-assisted pair route's body, parameterized so the gate
     * (shared 16-centroid index, P = [[IvfPairProbe]]) and the scale
-    * measurement ([[graft.EmbedIvfRecall]]: ~√n centroids) share one
+    * measurement (`BENCH_embed_ivf.json`: ~√n centroids) share one
     * definition. Multi-assign every indexed vector to its top-`probe`
     * centroids ([[topPBuckets]] — skinny rows), attach each vector
     * ONCE by vec_id (P·n rows, the only vector-carrying shuffle —
@@ -477,22 +470,20 @@ object Ann {
 
   /** SQ8 two-stage top-K over the corpus dir's shared IVF index at an
     * arbitrary pool width — the config-wired production entry behind
-    * `[scale] sq8_cands` ([[ScaleOps.annSq8]]) and the
-    * [[graft.Sq8PoolSweep]] recall measurement. `queryPred` defaults
-    * to the `ann_sq8` gate cohort. */
+    * `[scale] sq8_cands` ([[ScaleOps.annSq8]]), over the `ann_sq8`
+    * gate cohort. */
   private[graft] def sq8TopKFor(s: SparkSession, d: String, pool: Int,
-      prune: Boolean = false,
-      queryPred: Column =
-        col("vec_id") >= 2 * NumQueries && col("vec_id") < 3 * NumQueries): DataFrame = {
+      prune: Boolean = false): DataFrame = {
     DotProduct.register(s)
     val idx = corpusIdx(s, d)
-    sq8TopK(idx, queryPred, pool, prune)
+    sq8TopK(idx, col("vec_id") >= 2 * NumQueries && col("vec_id") < 3 * NumQueries,
+      pool, prune)
   }
 
   /** The IVF-assisted mid-tier pair route at an ARBITRARY centroid
     * count — the config-wired production entry behind
     * `[scale] ivf_pair_bucket` ([[ScaleOps.embedNearDupIvf]]) and the
-    * sizing the [[graft.EmbedIvfRecall]] sweep prices: flat bucket
+    * sizing `BENCH_embed_ivf.json` prices: flat bucket
     * size (centroids = n / bucket) keeps candidate volume LINEAR in n,
     * where the gate's fixed-16 / a √n rule grow it super-linearly
     * (SURVEY §9.12). One cached index per (corpus, count) — repeated
@@ -569,8 +560,8 @@ object Ann {
       .select(col("query_id"), col("vec_id"), col("qdot"))
   }
 
-  /** The full SQ8 two-stage top-K (shared by `ann_sq8`, `ann_ivf_sq8`,
-    * [[ScaleOps.annSq8]] and the [[graft.Sq8PoolSweep]] measurement):
+  /** The full SQ8 two-stage top-K (shared by `ann_sq8`, `ann_ivf_sq8`
+    * and [[ScaleOps.annSq8]]):
     * stage-1 candidates off the persisted codes, then the exact float
     * rerank — candidates are collected as a vec_id IN list (≤
     * pool×queries ids) so the float attach is a PRUNED scan of

@@ -254,17 +254,13 @@ object AnnPq {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** [[pqTopK]] for the measurement mains ([[graft.Sq8PoolSweep]]
-    * prices the PQ routes on the same persisted geometry as SQ8) and
-    * [[ScaleOps.annPq]] — the default cohort IS the `ann_pq` gate's,
+  /** [[pqTopK]] for [[ScaleOps.annPq]] over the `ann_pq` gate cohort,
     * stated once here so a future cohort re-shuffle can't desync a
     * copy (the sq8TopKFor idiom). */
   private[graft] def pqTopKFor(s: SparkSession, d: String, pool: Int,
-      prune: Boolean = false, residual: Boolean = false,
-      wide: Boolean = false, opq: Boolean = false,
-      queryPred: Column =
-        col("vec_id") >= QLo && col("vec_id") < QHi): DataFrame =
-    pqTopK(s, d, queryPred, prune, pool, residual, wide, opq)
+      prune: Boolean = false, wide: Boolean = false): DataFrame =
+    pqTopK(s, d, col("vec_id") >= QLo && col("vec_id") < QHi, prune, pool,
+      wide = wide)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ann_pq" -> ((s, d) =>

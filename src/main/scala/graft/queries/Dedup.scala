@@ -528,7 +528,7 @@ object Dedup {
     * `bandBits` up instead (12–16): band-collision candidates between
     * UNrelated vectors grow ~ groups · n² / 2^bandBits, so 8-bit keys
     * saturate as n approaches ~2⁸·(per-key cap) — the knee is measured
-    * in `BENCH_embed_bands.json` ([[graft.EmbedBandKnee]]) and
+    * in `BENCH_embed_bands.json` and
     * interpreted in SURVEY §9.12. Reachable without code edits via
     * `graft.toml [scale] embed_band_bits`
     * ([[graft.config.ScaleConfig]]). */
@@ -586,8 +586,7 @@ object Dedup {
 
   /** Candidate discovery for [[embedLshPairs]]: explode each vector
     * into its `64 / bandBits` sign-band keys, cap hot keys, self-join
-    * on (band, key). Split out so the knee probe can count the
-    * pre-verify volume — the cost driver — without paying the verify. */
+    * on (band, key). */
   private def embedLshCands(e: DataFrame, cap: Int, bandBits: Int): DataFrame =
     // Single-probe = rotation 0 of the multiprobe kernel (identity
     // re-tiling (1, 0)): graft_bands's pk injectively packs (band,
@@ -601,45 +600,6 @@ object Dedup {
       .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb")), "vec_b")
       .select(col("vec_a"), col("vec_b"), expr("graft_dot(va, vb)").as("cosine"))
       .filter(col("cosine") >= EmbedCosineThreshold)
-
-  /** Candidate-pair count for one embedding band setting — the
-    * measurement body behind [[graft.EmbedBandKnee]] (the
-    * [[simhashCandidateCount]] twin: pre-verify volume is what the
-    * ×64 `d_embed_lsh_pairs` row is spending its time on). */
-  private[graft] def embedLshCandCount(s: SparkSession, d: String,
-      cap: Int, bandBits: Int): Long =
-    embedLshCands(normalizedVecs(s, d), cap, bandBits).count()
-
-  /** GROUND-TRUTH pair count: brute-force all-pairs cosine ≥ threshold
-    * (the d_embed_neardup shape, count only) — the recall denominator
-    * for [[graft.EmbedBandKnee]]'s multiprobe frontier. O(n²) by
-    * definition; computable up to the ×10 corpus (20k vectors ≈ 2×10⁸
-    * ordered pairs) where the banded runs are measured. */
-  private[graft] def embedTruePairCount(s: SparkSession, d: String): Long =
-    embedTruePairs(s, d).count()
-
-  /** The ground-truth pair frame itself (one `cosine` column, ≥ the
-    * gate threshold) — the knee's tiered-recall denominators slice it
-    * by cosine, because banded sign-LSH recall is a function of the
-    * pair's cosine: a 0.45-cosine pair flips ~35% of sign bits and is
-    * structurally hard to band, a 0.9+ near-dup flips a few percent
-    * and recalls near-totally. The broadcast nested-loop runs the
-    * codegen `graft_dot` over all n²/2 ordered pairs — measured ~60 s
-    * for 128k vectors (8.2×10⁹ pairs) at local[32], so the truth
-    * denominator is computable well past every corpus this repo
-    * strikes (the r10 "uncomputable at 128k" note was wrong). */
-  private[graft] def embedTruePairs(s: SparkSession, d: String): DataFrame = {
-    val e = normalizedVecs(s, d)
-    e.as("a").join(broadcast(e.as("b")), col("a.vec_id") < col("b.vec_id"))
-      .select(expr("graft_dot(a.v, b.v)").as("cosine"))
-      .filter(col("cosine") >= EmbedCosineThreshold)
-  }
-
-  /** Multiprobe candidate count (pre-verify volume) — the cost driver
-    * the frontier weighs recall against. */
-  private[graft] def embedLshCandCountMulti(s: SparkSession, d: String,
-      cap: Int, bandBits: Int, rotations: Int): Long =
-    embedLshCandsMulti(normalizedVecs(s, d), cap, bandBits, rotations).count()
 
   /** Multi-probe coordinate rotations: dim i of rotation r reads
     * source dim (a_r·i + b_r) mod 64 — a_r ODD makes the map a
@@ -687,10 +647,10 @@ object Dedup {
     * the FULL vector table — corpus bands recomputed per call, the
     * shape [[embedIndex]]'s persisted probe exists to retire —
     * oriented delta→corpus with the gate's best-match tie rules and
-    * an `is_new` verdict per delta vector. ONE definition shared by
-    * EmbedIndexSpec (pins probe ≡ this) and EmbedIndexProbe (prices
-    * probe vs this), so the pinned twin and the priced twin cannot
-    * drift apart. Unsorted — callers order or compare as needed. */
+    * an `is_new` verdict per delta vector. ONE definition: the twin
+    * EmbedIndexSpec pins probe ≡ this against is the one
+    * `EMBED_INDEX_SCALING.json` priced the probe against. Unsorted —
+    * callers order or compare as needed. */
   private[graft] def embedIncrSelfContained(s: SparkSession, d: String): DataFrame = {
     val pairs = embedLshPairsMulti(s, d, MaxBandSize, 8, 4)
     val m = pairs.select(
@@ -817,8 +777,8 @@ object Dedup {
     * Physical shape (round 7, probe-driven): the former formulation
     * exploded every candidate through a per-shingle equi-join
     * (|cands| × shingles-per-doc intermediate rows — 300M rows and
-    * 53 of the pipeline's 69 seconds at ×64, measured by
-    * [[DedupProbe]]), then folded the matches back with a pair
+    * 53 of the pipeline's 69 seconds at ×64, measured by a
+    * per-stage cost run), then folded the matches back with a pair
     * groupBy and re-joined per-doc counts twice. Instead the distinct
     * shingle hashes are collected ONCE into a sorted per-doc array
     * (one agg over the shingle frame, |docs| output rows) and each
@@ -844,16 +804,6 @@ object Dedup {
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col(leftCol), col(rightCol), col("jaccard"))
   }
-
-  // Probe accessors for [[DedupProbe]] (stage-cost diagnostics only).
-  private[queries] def hashedShinglesProbe(s: SparkSession, d: String): DataFrame =
-    hashedShingles(s, d)
-  private[queries] def minhashSignaturesProbe(s: SparkSession, d: String): DataFrame =
-    minhashSignatures(s, d)
-  private[queries] def minhashBandRowsProbe(sig: DataFrame, cap: Int): DataFrame =
-    minhashBandRows(sig, cap)
-  private[queries] def verifyJaccardProbe(cands: DataFrame, sh: DataFrame): DataFrame =
-    verifyJaccard(cands, sh, "doc_a", "doc_b")
 
   /** MinHash+LSH near-dup pipeline body (see the `d_minhash_lsh` entry
     * in [[queries]]); `cap` is the hot-band cap, [[MaxBandSize]] in
@@ -936,7 +886,7 @@ object Dedup {
     * 2^Δ per band but REMOVES guaranteed radius (fewer bands), so at a
     * fixed hamming contract the production move at larger n is a wider
     * signature (more simhash bits), not wider bands over 60. The knee
-    * is measured in `BENCH_simhash_bands.json` (see [[graft.BandKnee]])
+    * is measured in `BENCH_simhash_bands.json`
     * and documented in SURVEY §9.12.
     *
     * All `bands` band keys come from ONE pass over sig: band index and
@@ -979,9 +929,9 @@ object Dedup {
       .distinct()
   }
 
-  /** Candidate-pair count for one band setting — the measurement body
-    * behind [[graft.BandKnee]] (pre-verify volume is the cost driver;
-    * the verified pair set is setting-invariant by pigeonhole). */
+  /** Candidate-pair count for one band setting — the measured quantity
+    * in `BENCH_simhash_bands.json` (pre-verify volume is the cost
+    * driver; the verified pair set is setting-invariant by pigeonhole). */
   private[graft] def simhashCandidateCount(s: SparkSession, d: String,
       cap: Int, bandBits: Int): Long =
     simhashBandCands(simhashSig(s, d).localCheckpoint(), cap, bandBits).count()

@@ -161,7 +161,7 @@ object DigestIndex {
           .join(broadcast(hashed.select(col("doc_id"))), "doc_id").limit(1).count()
         require(clashes == 0,
           s"append violates the disjointness contract: delta contains doc_ids already in " +
-            s"$tableName — rebuild or compact to reconcile")
+            s"$tableName — rebuild to reconcile")
       }
       writeBucketed(hashed, tableName, "content_hash", buckets, "append")
       // [scale] compact_every_appends cadence — base tables only

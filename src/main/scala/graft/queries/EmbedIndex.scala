@@ -250,8 +250,8 @@ object EmbedIndex {
         require(clashes == 0,
           s"append violates the disjointness contract: delta contains vec_ids already in " +
             s"$vecsTable or $tableName (an id present in one table but absent from the " +
-            "other means a previous append failed between its two commits — rebuild or " +
-            "compact to reconcile)")
+            "other means a previous append failed between its two commits — rebuild to " +
+            "reconcile)")
       }
       // Disjoint tables off one checkpointed frame — concurrent jobs
       // (the MinhashIndex/PostingsIndex two-table idiom; the union

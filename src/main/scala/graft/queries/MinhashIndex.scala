@@ -307,8 +307,8 @@ object MinhashIndex {
         require(clashes == 0,
           s"append violates the disjointness contract: delta contains doc_ids already in " +
             s"$arraysTable or $tableName (an id present in one table but absent from the " +
-            "other means a previous append failed between its two commits — rebuild or " +
-            "compact to reconcile)")
+            "other means a previous append failed between its two commits — rebuild to " +
+            "reconcile)")
       }
       // Disjoint tables off one checkpointed frame — submitted as
       // concurrent jobs (the PostingsIndex.appendDerived idiom; the

@@ -72,8 +72,7 @@ object ScaleOps {
     * pool): stage 1 ranks the persisted int8 codes and keeps `pool`
     * candidates per query, stage 2 reranks them with the exact float
     * cosine — the pool is the memory/recall trade a serving preset
-    * sizes (recall@10-vs-pool curve measured by [[graft.Sq8PoolSweep]]
-    * into `BENCH_sq8.json`). `prune` composes the IVF bucket prune in
+    * sizes (recall@10-vs-pool curve measured in `BENCH_sq8.json`). `prune` composes the IVF bucket prune in
     * front (the `ann_ivf_sq8` stack). */
   def annSq8(s: SparkSession, d: String, cfg: EngineConfig,
       prune: Boolean = false): DataFrame =
@@ -90,7 +89,7 @@ object ScaleOps {
     * 0.36 @ 128k pool 50, BENCH_sq8.json) — on BOTH the unpruned and
     * the IVF-pruned stack (r14 VERDICT #4: the production serving
     * shape gets the measured-best geometry; gate `ann_ivf_pq_w8`).
-    * Recall-vs-pool priced next to SQ8 by [[graft.Sq8PoolSweep]]. */
+    * Recall-vs-pool priced next to SQ8 in `BENCH_sq8.json`. */
   def annPq(s: SparkSession, d: String, cfg: EngineConfig,
       prune: Boolean = false): DataFrame =
     AnnPq.pqTopKFor(s, d, cfg.scale.pqCands, prune,
@@ -128,8 +127,8 @@ object ScaleOps {
 
   /** IVF-assisted mid-tier embedding pair DISCOVERY at the configured
     * centroid sizing (`[scale] ivf_pair_bucket`): centroids =
-    * max(16, n / bucket) — the FLAT-BUCKET rule the EmbedIvfRecall
-    * sweep committed (bucket size stays flat as n grows ⇒ candidate
+    * max(16, n / bucket) — the FLAT-BUCKET rule the
+    * `BENCH_embed_ivf.json` sweep committed (bucket size stays flat as n grows ⇒ candidate
     * volume stays LINEAR in n, where the r12 √n rule grew it ~n^1.5
     * with falling recall — SURVEY §9.12). bucket = 0 (the default)
     * keeps √n for parity with the r12 artifact rows. The route's

@@ -182,8 +182,8 @@ class HybridSearch(catalog: Catalog) {
     val needle = columnName.toLowerCase
     ToolRows(Seq("unique_id", "name", "layer", "file_path", "centrality"),
       snap.models
-        .filter(m => snap.columnsByModel.getOrElse(m.uniqueId, Vector.empty)
-          .exists(_.name.toLowerCase.contains(needle)))
+        .filter(m => snap.columnNamesLower.getOrElse(m.uniqueId, Vector.empty)
+          .exists(_.contains(needle)))
         .sortBy(m => (-m.centrality, m.uniqueId))
         .take(limit)
         .map(m => (m.uniqueId, m.name, m.layer, m.filePath, m.centrality)))

@@ -57,6 +57,7 @@ final class Snapshot(
     val children: Map[String, Vector[String]],
     val parents: Map[String, Vector[String]],
     val columnsByModel: Map[String, Vector[ColumnInfo]],
+    val columnNamesLower: Map[String, Vector[String]],
     val testsByModel: Map[String, Vector[TestInfo]],
     val macros: Vector[MacroInfo],
     val sources: Map[String, SourceInfo],
@@ -190,6 +191,9 @@ object Snapshot {
         str(r, "description"), r.getAs[Boolean]("is_primary_key"),
         r.getAs[Boolean]("is_foreign_key"))
     }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sortBy(_.name).toVector }
+    // find_models_by_column matches on these, so no call lower-cases
+    // the whole catalog's column names again.
+    val columnNamesLower = columnsByModel.map { case (k, cs) => k -> cs.map(_.name.toLowerCase) }
 
     val testsByModel = catalog.tests.collect().map { r =>
       TestInfo(str(r, "unique_id"), str(r, "name"), str(r, "test_type"),
@@ -226,7 +230,7 @@ object Snapshot {
       .distinct.groupBy(t => (t._1, t._2)).map { case (k, v) => k -> v.length.toLong }
 
     new Snapshot(models, modelById, idByNameLower, children, parents,
-      columnsByModel, testsByModel, macros, sources, postings, nDocs,
+      columnsByModel, columnNamesLower, testsByModel, macros, sources, postings, nDocs,
       avgFieldLen, dfByTermField)
   }
 }

@@ -137,12 +137,6 @@ object EventStreams {
     }
   }
 
-  /** The raw normalized event stream — probe access for
-    * [[graft.queries.StreamFloorProbe]]'s no-op-operator floor
-    * measurement. */
-  private[graft] def rawEventStream(spark: SparkSession, dir: String): DataFrame =
-    readEvents(spark, dir)
-
   /** Daily tumbling-window counts + exact decimal sums per event type,
     * with a 1-hour watermark. Complete-mode memory sink: the driver
     * gate runs bounded data; a production run would append to a

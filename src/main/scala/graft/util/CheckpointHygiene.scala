@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * `scoped` snapshots the persisted-RDD id set, runs the body, and
   * unpersists every RDD persisted DURING the body that the snapshot
   * did not contain — exactly the per-round orphan discipline
-  * `graft.Bench` and `IncrDeltaProbe` run. The body must CONSUME its
+  * `graft.Bench` runs. The body must CONSUME its
   * result (collect/write/count): frames that escape the scope lose
   * their checkpoint blocks and cannot be recomputed. Long-lived frames
   * built inside the scope on purpose (a first `Dedup.incrIndex` call

@@ -64,6 +64,24 @@ class MinhashAppendRecoverySpec extends SparkSuite {
     } finally { idx.drop(); full.drop() }
   }
 
+  test("minhash: compact() keeps stranded rows; the retry still trips a guard that says rebuild") {
+    val idx = MinhashIndex.fresh(spark, s"rec-gen|$d", half1)
+    var compacted = idx
+    try {
+      idx.writeBucketed(
+        idx.deriveRows(half2).filter(col("sig").isNotNull)
+          .select(col("doc_id"), col("hs")),
+        idx.arraysTable, "doc_id", idx.buckets, "append")
+      // compact() rewrites the tables with their content unchanged, so
+      // the stranded arrays rows survive it.
+      compacted = idx.compact()
+      val msg = intercept[IllegalArgumentException] { compacted.append(half2) }.getMessage
+      assert(msg.contains("disjointness"))
+      assert(msg.contains("rebuild") && !msg.contains("compact"),
+        s"the guard must name the repair that works: $msg")
+    } finally { idx.drop(); compacted.drop() }
+  }
+
   test("minhash: stranded BANDS at the hot-band cap only suppress matches; retry trips the guard") {
     import spark.implicits._
     val text = "the quick brown fox jumps over the lazy dog by the river bank"
